@@ -203,7 +203,8 @@ object Bench {
     // characters of stdout, and the full per-query line above is ~4x
     // that — so it can never be machine-parsed from the capture. Print a
     // <=1900-char digest LAST: total, per-family subtotals (prefix before
-    // the first '_' digit group), and the slowest queries, in the same
+    // the first '_' digit group), the effective join configs, and the
+    // slowest queries, in the same
     // {"metric",...} shape so a line-oriented JSON scan of the capture
     // finds one complete, parseable record.
     val fams = results.filter(_._3).groupBy { case (k, _, _) =>
@@ -212,7 +213,7 @@ object Bench {
       .toSeq.sorted.mkString("{", ",", "}")
     val slow = results.filter(_._3).sortBy(-_._2)
     // greedily keep the slowest queries while the digest stays under budget
-    val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size},"families":$fams,"failed":$failed,$sentinelJson,"flagged":$flaggedDigest,"decomp":$decompDigest,"sf":"$sfDir","slowest":{"""
+    val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size},"families":$fams,"failed":$failed,$sentinelJson,"flagged":$flaggedDigest,"decomp":$decompDigest,"conf":$confJson,"sf":"$sfDir","slowest":{"""
     val budget = 1900 - head.length - 2
     val kept = new StringBuilder
     slow.foreach { case (k, v, _) =>

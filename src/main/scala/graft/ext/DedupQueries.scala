@@ -1,6 +1,11 @@
 package graft.ext
 
+import scala.collection.mutable.LongMap
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 
 import graft.CatalogQuery
@@ -83,233 +88,106 @@ object DedupQueries {
       |SELECT v AS vec_id, CAST(min(x) AS BIGINT) AS component
       |FROM reach GROUP BY v ORDER BY vec_id""".stripMargin
 
-  /** One large-star round: for each node u of the undirected view,
-    * m = min(N(u) ∪ {u}); rewire every strictly-larger neighbor to m.
-    * Output edges satisfy u > v (child → smaller parent). */
-  private def largeStar(e: DataFrame): DataFrame = {
-    // repartition(u) BEFORE the two references (r17, guide §2.4): the
-    // groupBy and the join both need `und` clustered by u; expressed as
-    // two independent reads, each planned its own exchange and the und
-    // subplan evaluated twice. One explicit repartition makes both
-    // required distributions already-satisfied, so the shuffle is
-    // planned once (ReusedExchange on the second reference) and the
-    // union+project under it runs once.
-    val und = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      .repartition(col("u"))
-    val mins = und.groupBy(col("u")).agg(min(col("v")).as("mn"))
-    // No trailing distinct (r17): largeStar's output feeds ONLY
-    // smallStar, whose groupBy-min is duplicate-insensitive and whose
-    // own trailing distinct dedups the round's result — the result
-    // relation is identical, and each round saves one full |E|-row
-    // exchange + aggregation. Output volume stays <= |E| rows (one per
-    // undirected edge), so nothing blows up between the stars.
-    und.join(mins, "u")
-      .filter(col("v") > col("u"))
-      .select(col("v").as("u"), least(col("mn"), col("u")).as("v"))
-  }
-
-  /** One small-star round over child→parent edges (u > v invariant):
-    * for each u, m = min(parents(u)); rewire u and every non-min
-    * parent to m. Preserves the u > v invariant. */
-  private def smallStar(e: DataFrame): DataFrame = {
-    // same repartition-for-reuse shape as largeStar: smallStar's input
-    // is largeStar's (unmaterialized) output, which the groupBy and the
-    // join would otherwise each recompute AND re-shuffle; clustering it
-    // once by u makes the second reference a ReusedExchange.
-    val ep = e.repartition(col("u"))
-    val mins = ep.groupBy(col("u")).agg(min(col("v")).as("m"))
-    ep.join(mins, "u")
-      .filter(col("v") =!= col("m"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .union(mins.select(col("u"), col("m").as("v")))
-      .distinct()
-  }
-
-  /** Connected components by alternating large-star / small-star
-    * contraction ("Connected Components in MapReduce and Beyond",
-    * Kiveris et al. 2014) — the round-robust scale path next to
-    * [[minLabelComponents]]. Min-label propagation needs rounds =
-    * component DIAMETER: ideal for near-dup clusters (star-like,
-    * diameter ≤ ~3), catastrophic for chain-shaped components
-    * (co-reference chains, adversarial layouts — O(n) rounds). Star
-    * contraction roughly halves tree heights every (large, small)
-    * pair, converging in O(log n) rounds on ANY topology; each round
-    * is one aggregation + one co-partitioned join per star, the same
-    * per-round cost class as a propagation round. Convergence test =
-    * (count, hash-sum) signature equality of the edge relation — one
-    * tiny driver-side pair per round, never the edges themselves.
-    * Returns (v, lbl = min id of v's component) over exactly the
-    * vertex set of `pairs`, plus the round count (spec surface). */
-  private[graft] def starComponentsWithRounds(
+  /** Connected components of the undirected pair graph (a_id, b_id):
+    * the one CC engine behind dd08, dd10, dd13, dd16, dd19 and dd21.
+    * Returns (v, lbl = min id of v's component) over exactly the vertex
+    * set of `pairs`, both columns in the pairs' own id type, plus the
+    * number of contraction rounds run.
+    *
+    * Alternating large-star / small-star contraction ("Connected
+    * Components in MapReduce and Beyond", Kiveris et al. 2014) converges
+    * in O(log n) rounds on ANY topology, where min-label propagation
+    * pays the component diameter (a long near-dup chain is one round per
+    * hop or two). Each star runs on RDD[(Long, Long)] over ONE
+    * HashPartitioner sized from the pair input's own partition count,
+    * which AQE has already coalesced from bytes: the edges are shuffled
+    * once by vertex, the per-vertex minimum is a reduceByKey on that
+    * same partitioner (narrow, so no second shuffle), and each edge
+    * partition is streamed against its own map of minimums, so a hub
+    * vertex never buffers its neighbour list. A round is one
+    * localCheckpointed RDD whose single action both materializes it and
+    * returns its (count, bit-xor hash) convergence signature: one Spark
+    * job per round, where under AQE every DataFrame exchange is a job of
+    * its own.
+    */
+  private[graft] def connectedComponents(
       pairs: DataFrame, what: String): (DataFrame, Int) = {
-    var e = pairs.toDF("u", "v")
-      .filter(col("u") =!= col("v")).distinct()
-      .localCheckpoint(true)
-    var prev = (-1L, 0L)
+    val idType = pairs.schema(0).dataType
+    // InternalRow, not Row: nothing is deserialized per pair. Resolving
+    // toRdd runs the pair pipeline's AQE stages; its last stage runs in
+    // round 1's job, which is therefore timed with the pairs.
+    val input = pairs.toDF("a", "b")
+      .select(col("a").cast("long"), col("b").cast("long"))
+      .queryExecution.toRdd.map(r => (r.getLong(0), r.getLong(1)))
+    val part = new HashPartitioner(math.max(1, input.getNumPartitions))
+    // zips each partition of `e` (already partitioned by `part`) with
+    // its own map of per-vertex minimums
+    def withMins(e: RDD[(Long, Long)])(
+        f: (Iterator[(Long, Long)], LongMap[Long]) => Iterator[(Long, Long)]) =
+      e.zipPartitions(e.reduceByKey(part, math.min(_, _))) { (es, ms) =>
+        f(es, LongMap.from(ms))
+      }
+    // large star: m = min(N(u) ∪ {u}); every larger neighbour of u
+    // becomes a child of m. A self-pair (u, u) is kept as (u, m), so a
+    // vertex seen only in a self-pair keeps its row. Output edges are
+    // child -> parent with child >= parent.
+    def largeStar(e: RDD[(Long, Long)]) =
+      withMins(e.flatMap { case (u, v) => Iterator((u, v), (v, u)) }
+          .partitionBy(part)) { (es, m) =>
+        es.collect { case (u, v) if v >= u => (v, math.min(m(u), u)) }
+      }
+    // small star over child -> parent edges: m = u's least parent; u and
+    // every other parent of u become children of m
+    def smallStar(e: RDD[(Long, Long)]) =
+      withMins(e.partitionBy(part)) { (es, m) =>
+        es.collect { case (u, v) if v != m(u) => (v, m(u)) } ++ m.iterator
+      }
+    var prev: RDD[(Long, Long)] = null
+    var cur = input
+    var sig = (-1L, 0L)
     var rounds = 0
     var converged = false
-    var prevEdges: DataFrame = null
-    // dev-only per-round forensics, same switch as minLabelComponents
-    val ccLog = sys.env.contains("SPARK_GRAFT_CC_LOG")
-    while (!converged && rounds < 30) {
-      val t0 = if (ccLog) System.nanoTime() else 0L
-      prevEdges = e
-      // The (count, bit_xor-hash) convergence signature rides INSIDE
-      // the checkpoint job as observed metrics (r17, same move as
-      // minLabelComponents): the loop is per-job latency at sf0.1, and
-      // a separate signature collect doubled the jobs per round. The
-      // metrics aggregate exactly the rows the checkpoint materializes.
-      // bit_xor, not sum: order-independent AND overflow-free under
-      // ANSI mode (sum of 64-bit hashes throws ARITHMETIC_OVERFLOW).
-      val obs = org.apache.spark.sql.Observation()
-      e = smallStar(largeStar(e))
-        .observe(obs, count(lit(1)).as("n"),
-          coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L)).as("h"))
-        .localCheckpoint(true)
-      val m = obs.getAsJava
-      val cur = (m.get("n").asInstanceOf[java.lang.Long].longValue(),
-        m.get("h").asInstanceOf[java.lang.Long].longValue())
-      converged = cur == prev
+    def round(): Unit = {
+      // both stars can emit an edge twice; distinct keeps each round a
+      // set, which the bit-xor signature needs (a pair would cancel)
+      val next = smallStar(largeStar(cur)).distinct(part.numPartitions)
+      next.localCheckpoint()
+      // xxhash64(u, v) under Spark's seed; bit-xor is order-independent
+      val s = next.aggregate((0L, 0L))(
+        (a, e) => (a._1 + 1, a._2 ^ XXH64.hashLong(e._2, XXH64.hashLong(e._1, 42L))),
+        (a, b) => (a._1 + b._1, a._2 ^ b._2))
+      if (prev != null) prev.unpersist(blocking = false)
       prev = cur
+      cur = next
+      converged = s == sig
+      sig = s
       rounds += 1
-      if (ccLog) println(f"[cc:$what] star round $rounds%2d: " +
-        f"${cur._1}%8d edges, ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     }
-    require(converged,
-      s"$what star contraction did not converge within $rounds rounds")
-    // The signature is a (count, bit_xor-hash) pair — a collision
-    // across rounds would declare convergence early and emit wrong
-    // labels with no error. Confirm the fixpoint EXACTLY: at
-    // convergence the edge relation is tiny relative to the input
-    // (child→root stars), so one symmetric except() is cheap, and it
-    // runs once, not per round.
-    val drift = e.except(prevEdges).count() + prevEdges.except(e).count()
-    require(drift == 0L,
-      s"$what star contraction signature collision: relation still " +
-        s"moving at declared fixpoint ($drift differing edges)")
-    // at the fixpoint e is child→root star edges; roots never appear
-    // as a child, so label = root where an edge exists, self otherwise
-    val verts = pairs.select(col("a_id").as("x"))
-      .union(pairs.select(col("b_id").as("x"))).distinct()
-    val labels = verts.join(e, verts("x") === e("u"), "left")
-      .select(col("x").as("v"), coalesce(e("v"), col("x")).as("lbl"))
-    (labels, rounds)
-  }
-
-  /** Connected components over an undirected pair set (a_id, b_id) by
-    * Pregel-style iterative min-label propagation; returns (v, lbl)
-    * with lbl = min id reachable from v. Shared by dd08 (cosine pairs)
-    * and dd10 (LSH-verified Jaccard pairs).
-    *
-    * Each propagation hop is one shuffle join edges⋈labels + one
-    * aggregation; hops needed = component diameter, and near-dup
-    * clusters are star-like (diameter ≤ ~3), so the driver loop runs
-    * O(1) distributed passes — this is the standard distributed
-    * connected-components shape at cluster scale, not a driver-side
-    * algorithm. Since r18 each MATERIALIZED round runs two hops (see
-    * the in-loop note): hop semantics and final labels are untouched,
-    * but driver jobs, convergence counts and checkpoint writes halve.
-    * localCheckpoint truncates the growing lineage each round (blocks
-    * are context-cleaned when the round's RDD is dropped; Bench/driver
-    * also clear caches per query). */
-  private[graft] def minLabelComponents(pairs: DataFrame, what: String): DataFrame = {
-    // undirected: propagate labels along both edge directions.
-    // Deliberately cached UNPARTITIONED (r17): a hash(src)-pinned cache
-    // would save the per-round edge exchange, but it also pins every
-    // downstream stage to the pinned partition count, defeating AQE's
-    // scale-adaptive coalescing — measured 1.8× WORSE at sf0.1/local[32]
-    // (cc_loop 3.8 → 6.8 s) because each of the loop's tiny stages ran
-    // at 32 tasks instead of the 1-2 AQE picks from actual bytes. With
-    // two hops per materialized round (below) the edge exchange is
-    // paid twice per checkpoint — half the rounds of the one-hop
-    // shape for the same hop count; AQE sizes it from bytes at any
-    // scale. (Full O(log n)-round robustness on chain graphs is
-    // dd16's star-contraction engine, not this loop.)
-    val edges = pairs
-      .union(pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
-      .toDF("src", "dst").persist()
-    try {
-      // seed with the 1-hop minimum (one aggregation) rather than
-      // identity labels: it is exactly identity-init plus the first
-      // propagation round, so the loop starts a round ahead and the
-      // identity-init distinct-shuffle disappears (every vertex
-      // appears as dst because edges carry both directions)
-      // Sub-phase attribution (OpMetrics, the ss03 lesson): the eager
-      // seed checkpoint forces the ENTIRE upstream pair pipeline
-      // (shingle → LSH → verify for dd10) plus the 1-hop minimum, and
-      // the loop is pure propagation — two different cost stories a
-      // single bench number conflates. "<what>_pairs_seed" /
-      // "<what>_cc_loop" medians surface in Bench's decomp line, so an
-      // episode names the phase it hit.
-      var labels = graft.core.OpMetrics.timed(s"${what}_pairs_seed") {
-        edges.groupBy(col("dst"))
-          .agg(min(col("src")).as("mn"))
-          .select(col("dst").as("v"), least(col("dst"), col("mn")).as("lbl"))
-          .localCheckpoint(true)
-      }
-      var converged = false
-      var iters = 0
-      // dev-only per-round forensics (rounds vs time-per-round — the
-      // two candidate costs of an iterative CC at scale); inert unless
-      // SPARK_GRAFT_CC_LOG is set, which bench/verify never set
-      val ccLog = sys.env.contains("SPARK_GRAFT_CC_LOG")
-      graft.core.OpMetrics.timed(s"${what}_cc_loop") {
-      while (!converged && iters < 25) {
-        val t0 = if (ccLog) System.nanoTime() else 0L
-        // TWO propagation hops per MATERIALIZED round (r18 — the r17
-        // scaladoc promised this but the loop still checkpointed every
-        // hop; ADVICE flagged the mismatch, this lands the change).
-        // Labels are monotone non-increasing under least(), so fusing
-        // two hops into one lineage segment changes nothing about the
-        // fixpoint; what halves is the per-distance overhead that is
-        // NOT the propagation itself: driver jobs (per-job latency
-        // dominates at sf0.1 — the r17 lesson) and, at scale, the
-        // eager localCheckpoint that copies the full |V|-row label
-        // table to executor storage once per round instead of once
-        // per two hops.
-        // h1 is referenced twice below (hop-2 candidate source + merge
-        // base); repartition(v) clusters it once so the second
-        // reference is a ReusedExchange, not a recompute of hop 1
-        // (the largeStar/smallStar r17 move).
-        val h1 = {
-          val cand1 = edges.join(labels, edges("src") === labels("v"))
-            .groupBy(col("dst")).agg(min(col("lbl")).as("c1"))
-          labels.join(cand1, labels("v") === cand1("dst"), "left")
-            .select(labels("v"), labels("lbl").as("prev"),
-              least(labels("lbl"), coalesce(col("c1"), labels("lbl")))
-                .as("lbl"))
-            .repartition(col("v"))
-        }
-        val cand2 = edges.join(h1, edges("src") === h1("v"))
-          .groupBy(col("dst")).agg(min(col("lbl")).as("c2"))
-        // The convergence count rides INSIDE the checkpoint job as an
-        // observed metric (r17), now spanning both hops: chg counts
-        // labels that dropped across the round (final lbl < prev =
-        // label before hop 1). Monotonicity makes chg == 0 equivalent
-        // to "hop 1 changed nothing AND hop 2 changed nothing", so
-        // the fixpoint test is exact.
-        val obs = org.apache.spark.sql.Observation()
-        val merged = h1.join(cand2, h1("v") === cand2("dst"), "left")
-          .select(h1("v"), col("prev"),
-            least(h1("lbl"), coalesce(col("c2"), h1("lbl"))).as("lbl"))
-          .observe(obs, sum(when(col("lbl") < col("prev"), 1L)
-            .otherwise(0L)).as("chg"))
-          .localCheckpoint(true)
-        val changed = obs.getAsJava.get("chg") match {
-          case null => 0L // empty relation: no rows, no change
-          case n: java.lang.Long => n.longValue()
-        }
-        labels = merged.select(col("v"), col("lbl"))
-        converged = changed == 0
-        iters += 1
-        if (ccLog) println(f"[cc:$what] round $iters%2d (2 hops): " +
-          f"$changed%8d changed, ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      }
-      }
+    // "<what>_pairs_seed" / "<what>_cc_loop" medians surface in Bench's
+    // decomp line, so an episode names the phase it hit
+    graft.core.OpMetrics.timed(s"${what}_pairs_seed")(round())
+    graft.core.OpMetrics.timed(s"${what}_cc_loop") {
+      while (!converged && rounds < 30) round()
       require(converged,
-        s"$what label propagation did not converge within $iters rounds")
-      labels
-    } finally edges.unpersist(blocking = false)
+        s"$what star contraction did not converge within $rounds rounds")
+      // A signature collision across rounds would declare convergence
+      // early and emit wrong labels with no error, so confirm the
+      // fixpoint exactly, once: tag each edge with the round(s) holding
+      // it; an edge not held by both rounds is drift.
+      val drift = cur.map((_, 1)).union(prev.map((_, 2)))
+        .reduceByKey(part, _ | _).filter(_._2 != 3).count()
+      prev.unpersist(blocking = false)
+      require(drift == 0L,
+        s"$what star contraction signature collision: relation still " +
+          s"moving at declared fixpoint ($drift differing edges)")
+    }
+    // at the fixpoint every edge is child -> root: a child's label is
+    // its root, a root's label is itself
+    val labels = cur.flatMap { case (c, r) => Iterator((c, r), (r, r)) }
+      .reduceByKey(part, math.min(_, _))
+    val out = pairs.sparkSession.createDataFrame(labels).toDF("v", "lbl")
+      .select(col("v").cast(idType).as("v"), col("lbl").cast(idType).as("lbl"))
+    (out, rounds)
   }
 
   val all: Seq[CatalogQuery] = Seq(
@@ -457,9 +335,9 @@ object DedupQueries {
       (s, dir) => {
         // pair source is dd06's capped all-pairs baseline — fine up to
         // the cap; dd10 is the composed scale path (LSH candidates in,
-        // same propagation loop)
+        // same CC kernel)
         val pairs = embeddingNearDupPairs(s, dir).select(col("a_id"), col("b_id"))
-        minLabelComponents(pairs, "dd08")
+        connectedComponents(pairs, "dd08")._1
           .select(col("v").as("vec_id"), col("lbl").cast("long").as("component"))
           .orderBy(col("vec_id"))
       },
@@ -541,7 +419,7 @@ object DedupQueries {
         // The composed 100 TB dedup pipeline in one query: shingle →
         // banded MinHash LSH (linear candidate generation, dd03's exact
         // machinery) → exact Jaccard verification on candidates only →
-        // min-label connected components (dd08's loop) → canonical =
+        // connected components (the shared star kernel) → canonical =
         // min doc_id. Unlike dd08, whose pair source is the capped
         // quadratic all-pairs baseline, every stage here is linear in
         // corpus size (candidates are bucket-capped), so the clustering
@@ -553,14 +431,14 @@ object DedupQueries {
             numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
             threshNum = 8, threshDen = 10)
           .select(col("a_id"), col("b_id"))
-        minLabelComponents(pairs, "dd10")
+        connectedComponents(pairs, "dd10")._1
           .select(col("v").as("doc_id"), col("lbl").cast("long").as("cluster"),
             (col("v") === col("lbl")).cast("long").as("keep"))
           .orderBy(col("doc_id"))
       },
       // Value oracle: recursive-CTE reachability over the SAME
       // engine-portable LSH pair chain as dd03's oracle. Parity is also
-      // spec-gated twice in ExtSpec: the propagation output must equal
+      // spec-gated twice in ExtSpec: the CC output must equal
       // an independent union-find over the same verified pair set, and
       // on a planted-duplicate corpus every planted group must collapse
       // to one cluster with the min doc_id kept.
@@ -576,7 +454,7 @@ object DedupQueries {
         // byte-identical, wrong when a near-dup group mixes a clean
         // copy with a boilerplate-padded one (near-dup groups usually
         // do). Same linear chain as dd10 (shingle → banded LSH →
-        // exact verify → min-label CC), then the keeper is the
+        // exact verify → CC), then the keeper is the
         // per-cluster quality argmax, computed WITHOUT a ranking
         // window (the dd09/dd20 rule: a row_number partition
         // serializes the largest cluster into one task, and dd19's
@@ -598,7 +476,7 @@ object DedupQueries {
             numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
             threshNum = 8, threshDen = 10)
           .select(col("a_id"), col("b_id"))
-        val cl = minLabelComponents(pairs, "dd19")
+        val cl = connectedComponents(pairs, "dd19")._1
           .select(col("v").as("doc_id"), col("lbl").cast("long").as("cluster"))
         val toks = TextOps.tokens(col("text"))
         val scored = d.select(col("doc_id"),
@@ -778,7 +656,7 @@ object DedupQueries {
         // question asked in every curation review (a dedup that eats
         // 40% of one source is a licensing/provenance signal, not
         // just a space win). dd10's chain verbatim (shingle -> banded
-        // LSH -> exact verify -> min-label CC -> keep-min), then one
+        // LSH -> exact verify -> CC -> keep-min), then one
         // 1:1 co-keyed join back to (source, n_tok) and ONE
         // map-combined groupBy on source — |sources| rows out at any
         // corpus size.
@@ -789,7 +667,7 @@ object DedupQueries {
             numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
             threshNum = 8, threshDen = 10)
           .select(col("a_id"), col("b_id"))
-        val cl = minLabelComponents(pairs, "dd21")
+        val cl = connectedComponents(pairs, "dd21")._1
           .select(col("v").as("doc_id"),
             (col("v") === col("lbl")).cast("long").as("keep"))
         d.join(cl, Seq("doc_id"), "left")
@@ -1209,9 +1087,8 @@ object DedupQueries {
               col("x.vec_id") < col("y.vec_id") && cos >= 0.4)
           .select(col("x.vec_id").as("a_id"), col("y.vec_id").as("b_id"))
         // edges never cross buckets, so components are bucket-local;
-        // the propagation loop is dd08's (rounds = group diameter, ~1-2
-        // for epsilon-ball duplicate groups)
-        val comp = minLabelComponents(pairs, "dd13")
+        // the CC kernel is dd08's
+        val comp = connectedComponents(pairs, "dd13")._1
           .select(col("v").as("vec_id"), col("lbl").cast("long").as("cluster"))
         // centroid similarity via a broadcast 16-row codebook join —
         // the centroid matrix rides once as data, never as literals
@@ -1428,15 +1305,12 @@ object DedupQueries {
       "dd16_cc_star",
       "Connected components by alternating large/small-star contraction (O(log n) rounds on ANY topology — the chain-robust scale path to dd08's diameter-bound propagation); same cosine >= 0.4 edges, same min-id labels",
       (s, dir) => {
-        // identical input graph and output contract as dd08, different
-        // iteration engine: star contraction's round count is
-        // O(log n) regardless of component shape, where min-label
-        // propagation pays the component diameter. The spec proves
-        // both engines agree label-for-label and that a planted
-        // 200-node path (diameter 199 — propagation's worst case)
-        // converges in a handful of contraction rounds.
+        // identical input graph, output contract and CC kernel as
+        // dd08: star contraction's round count is O(log n) regardless
+        // of component shape. The spec proves a planted 200-node path
+        // (diameter 199) converges in a handful of contraction rounds.
         val pairs = embeddingNearDupPairs(s, dir).select(col("a_id"), col("b_id"))
-        starComponentsWithRounds(pairs, "dd16")._1
+        connectedComponents(pairs, "dd16")._1
           .select(col("v").as("vec_id"), col("lbl").cast("long").as("component"))
           .orderBy(col("vec_id"))
       },

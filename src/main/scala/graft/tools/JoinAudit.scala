@@ -64,7 +64,9 @@ object JoinAudit {
       df.agg(count(lit(1)),
         bit_xor(xxhash64(struct(df.columns.map(col): _*)))).collect()
       println(f"TOTAL ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      Thread.sleep(500) // listener fires async; let it drain
+      // the listener fires on the async bus: drain it so every
+      // executed plan of this query is in `seen` before printing
+      org.apache.spark.sql.graftshim.GraftShim.drainListenerBus(spark, 10000)
       seen.forEach(s => println(s))
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))

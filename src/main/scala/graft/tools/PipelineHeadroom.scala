@@ -108,7 +108,7 @@ object PipelineHeadroom {
               threshNum = 8, threshDen = 10)
             .select(col("a_id"), col("b_id"))
           val (labels, rounds) =
-            graft.ext.DedupQueries.starComponentsWithRounds(pairs, "dd16-headroom")
+            graft.ext.DedupQueries.connectedComponents(pairs, "dd16-headroom")
           val nLabels = labels.count()
           val dt = (System.nanoTime() - t0) / 1e9
           println(f"HEADROOM $name%-24s n=$n rows=$nLabels%-9d ${dt}%.2f s rounds=$rounds")

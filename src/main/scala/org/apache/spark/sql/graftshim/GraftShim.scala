@@ -13,9 +13,9 @@ object GraftShim {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Drain the async listener bus (test-only: lets a job-counting
-    * SparkListener be read deterministically). `listenerBus` is
-    * `private[spark]`, hence the shim. */
+  /** Drain the async listener bus, so a SparkListener or
+    * QueryExecutionListener (specs, JoinAudit) is read deterministically.
+    * `listenerBus` is `private[spark]`, hence the shim. */
   def drainListenerBus(spark: SparkSession, timeoutMs: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 }

@@ -180,6 +180,69 @@ class ExtSpec extends SparkSpec {
     assert(got.filter(_._3 == 1L).map(_._1).toSet == Set(10L, 20L, 30L))
   }
 
+  test("dd10 end-to-end: a 120-hop near-dup chain is one cluster labelled by its min id") {
+    // Hop k is the 19-word window at word k of one chain-private word
+    // sequence: neighbours share 16 of 18 3-shingles (Jaccard 0.89,
+    // above dd10's 0.8), hops two apart 15 of 19 (0.79, below), so no
+    // verified edge skips a hop and the component's diameter is 120 —
+    // past any diameter-bound propagation guard. Ids rise along the
+    // chain, so the min label has to travel all 120 hops.
+    import spark.implicits._
+    val words = (0 until 139).map(i => s"link${i}w")
+    val chain = (0 until 121).map(k => (1000L + k, words.slice(k, k + 19).mkString(" ")))
+    val dir = java.nio.file.Files.createTempDirectory("dd10-chain").toString
+    plantDocs(chain.toDF("doc_id", "text"), dir)
+    // LSH misses a Jaccard-0.89 pair with probability about 0.017, but
+    // it is deterministic for fixed texts, and these words have every
+    // hop verified. That is checked first, so the cluster assertions
+    // below test the CC kernel alone.
+    val pairs = TextOps.lshNearDupPairs(
+        TextOps.wordShingleRows(Tables.table(spark, dir, "documents"),
+          "doc_id", "text", 3), "doc_id",
+        numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
+        threshNum = 8, threshDen = 10)
+      .select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs == (1000L until 1120L).map(a => (a, a + 1)).toSet,
+      s"LSH-verified pairs are not exactly the 120 chain hops: ${pairs.size}")
+    val got = SparkEntry.queries("dd10_dedup_clusters_lsh")(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(got.map(_._1).toSet == chain.map(_._1).toSet)
+    assert(got.forall(_._2 == 1000L),
+      s"chain split: ${got.groupBy(_._2).map { case (c, m) => c -> m.length }}")
+    assert(got.filter(_._3 == 1L).map(_._1).toSeq == Seq(1000L))
+  }
+
+  test("CC kernel equals a driver-side union-find on random pairs with duplicates, reversals and int ids") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261018L)
+    // a sparse random graph (small components, some self-pairs) plus a
+    // 150-vertex path laid over shuffled ids, so the min sits mid-path
+    val random = Seq.fill(300)((rnd.nextInt(400), rnd.nextInt(400)))
+    val order = rnd.shuffle((1000 until 1150).toVector)
+    val path = order.zip(order.tail)
+    val distinct = random ++ path :+ ((999, 999))
+    // every pair once more reversed, a sample duplicated as-is
+    val pairs = distinct ++ distinct.map(_.swap) ++ rnd.shuffle(distinct).take(80)
+    val (labels, _) = graft.ext.DedupQueries.connectedComponents(
+      rnd.shuffle(pairs).toDF("a_id", "b_id"), "spec-uf")
+    assert(labels.schema.map(_.dataType) ==
+      Seq(org.apache.spark.sql.types.IntegerType,
+        org.apache.spark.sql.types.IntegerType), labels.schema.toString)
+    val parent = scala.collection.mutable.Map[Int, Int]()
+    def find(x: Int): Int = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    distinct.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ra max rb) = ra min rb
+    }
+    val expected = parent.keys.toSeq.map(v => v -> find(v)).toMap
+    val got = labels.collect().map(r => r.getInt(0) -> r.getInt(1))
+    assert(got.length == expected.size, "a vertex is missing or duplicated")
+    assert(got.toMap == expected)
+  }
+
   test("dd19 best-rep dedup: the keeper is the quality argmax, not the min id; ties fall back to min id") {
     // group 10/11 exploits cyclic repetition: "x y z" repeated 3x and
     // 2x have the IDENTICAL 3-shingle set {xyz, yzx, zxy} (guaranteed
@@ -2079,7 +2142,7 @@ class ExtSpec extends SparkSpec {
     // round guard); star contraction must finish in O(log n)
     val path = (0L until 199L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val (labels, rounds) = graft.ext.DedupQueries
-      .starComponentsWithRounds(path, "spec-path")
+      .connectedComponents(path, "spec-path")
     assert(rounds <= 12, s"star contraction took $rounds rounds on a path")
     val bad = labels.filter(col("lbl") =!= 0L).count()
     assert(bad == 0, s"$bad path nodes not labeled with the component min")
