@@ -1,51 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every catalog query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric","value","unit","queries","sf"}. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // r17 (OPTIMIZATION_r17.md), env-parameterised with local
-      // defaults so the driver's bench stays comparable:
-      // - runtime bloom-filter injection OFF by default here: at bench
-      //   scale every injected filter is DEFAULT-sized (1M items /
-      //   8.4M bits — the optimizer has no stats to size it) and rides
-      //   on joins whose small side already broadcasts, so it is pure
-      //   build+broadcast overhead (measured −4% warm across the LSH
-      //   probe family, −0.3 s on tpcds_q14a). At 100 TB re-enable
-      //   (SPARK_GRAFT_RUNTIME_BLOOM=true) and size
-      //   ...bloomFilter.creationSideThreshold/expectedNumItems to the
-      //   real dimension cardinalities — guide §3.2.
-      // - join strategy (r18, ADVICE medium): sort-merge stays the
-      //   PLANNER default (SHJ's build-side hash map cannot spill, and
-      //   the static flip rode on size ESTIMATES, absent/unreliable at
-      //   scale — a misestimate at 100 TB is an executor OOM). The SHJ
-      //   win is taken through AQE's runtime rewrite instead:
-      //   maxShuffledHashJoinLocalMapThreshold converts SMJ→SHJ only
-      //   when every post-shuffle partition's MEASURED map output is
-      //   under the threshold, so the build map is bounded by a known
-      //   constant at any scale — the scale-aware gate the advisor
-      //   asked for (guide §3.1). Measured plan-neutral at sf0.1
-      //   (JoinAudit receipt in OPTIMIZATION_r18.md): every un-hinted
-      //   equi-join on the board broadcasts at this scale, and the
-      //   operators' deliberate SHJ sites carry explicit shuffle_hash
-      //   hints, which a planner default never overrides.
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_RUNTIME_BLOOM", "false"))
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP", "128m"))
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm-up (untimed): JIT + codegen caches + parquet footers, so the
@@ -68,12 +28,9 @@ object Bench {
     // exactly how ss03 was charged 14.26s in r9 (isolated re-run:
     // 1.06s). Spread passes put ~a full catalog (~40s+) between a
     // query's reps, so an episode has to persist across the whole run
-    // to move a median — and that case the global sentinel catches.
+    // to move a median — and that case the global sentinel catches
+    // (SCALING.md, "Spread-vs-adjacent bench passes").
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    // A/B escape hatch (SPARK_GRAFT_BENCH_ADJACENT=1): the pre-r10
-    // back-to-back rep order, kept ONLY so the spread-vs-adjacent
-    // comparison stays reproducible (SCALING.md records it).
-    val adjacent = sys.env.get("SPARK_GRAFT_BENCH_ADJACENT").contains("1")
     def runOnce(q: CatalogQuery): (Double, Boolean) = {
       val t0 = System.nanoTime()
       // FORCED evaluation, not count(): under a bare count() Catalyst
@@ -107,9 +64,7 @@ object Bench {
         .foreach(_.unpersist(blocking = false))
       (dt, ok)
     }
-    val passes: Seq[Seq[(Double, Boolean)]] =
-      if (adjacent) cat.map(q => (1 to reps).map(_ => runOnce(q))).transpose
-      else (1 to reps).map(_ => cat.map(runOnce))
+    val passes = (1 to reps).map(_ => cat.map(runOnce))
     val results = cat.zipWithIndex.map { case (q, i) =>
       val times = passes.map(_(i))
       // A throw on ANY rep fails the query — never masquerade as success.
@@ -191,12 +146,8 @@ object Bench {
     // Effective plan-shaping configs (r18, ADVICE): the env-gated join
     // strategy means two boards can time different plans — record which
     // one THIS board ran so receipts are self-describing.
-    val confJson = Seq(
-      "spark.sql.join.preferSortMergeJoin" -> "preferSMJ",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "runtimeBloom",
-      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "shjLocalMap")
-      .map { case (k, short) =>
-        "\"" + short + "\":\"" + spark.conf.get(k, "<unset>") + "\"" }
+    val confJson = GraftSession.planConfs
+      .map(p => "\"" + p.label + "\":\"" + spark.conf.get(p.key, "<unset>") + "\"")
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failed,$sentinelJson,"flagged":$flagged,"decomp":$decomp,"conf":$confJson,"sf":"$sfDir"}""")
     // The harness that captures this output keeps only the LAST ~2000

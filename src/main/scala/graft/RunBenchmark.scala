@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.{Benchmark, Variation}
 import graft.workloads.MicroBenchmarks
 
@@ -54,13 +52,7 @@ object RunBenchmark {
 
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     // -p / --parallel: the reference's post-shuffle partition knob
     opts.get("parallel").foreach(p =>

@@ -32,22 +32,8 @@ object Verify {
     // a dev convenience for re-verifying a few queries; the driver always
     // passes exactly two args (full run)
     val Array(sfDir, outDir, filters @ _*) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // same session shape as Bench (r17): verify must exercise the
-      // exact plans the bench times — see Bench.scala for the rationale
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_RUNTIME_BLOOM", "false"))
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP", "128m"))
-      .getOrCreate()
+    // the Bench session: verify must exercise the exact plans the bench times
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries.filter { case (name, _) =>
@@ -76,11 +62,7 @@ object Verify {
     // values this verification actually ran with in a sidecar file (NOT
     // inside oracle_sql.json, whose keys the driver treats as query
     // names).
-    val conf = Seq(
-      "spark.sql.join.preferSortMergeJoin",
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-      "spark.sql.shuffle.partitions")
+    val conf = (GraftSession.planConfs.map(_.key) :+ "spark.sql.shuffle.partitions")
       .map(k => s"${q(k)}: ${q(spark.conf.get(k, "<unset>"))}")
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_config.json"), conf)

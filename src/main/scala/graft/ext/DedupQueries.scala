@@ -331,7 +331,7 @@ object DedupQueries {
 
     CatalogQuery(
       "dd08_dedup_clusters",
-      "Near-dup cluster assignment: connected components over dd06's cosine pairs (iterative min-label propagation; canonical = min vec_id)",
+      "Near-dup cluster assignment: connected components over dd06's cosine pairs (star-contraction kernel; canonical = min vec_id)",
       (s, dir) => {
         // pair source is dd06's capped all-pairs baseline — fine up to
         // the cap; dd10 is the composed scale path (LSH candidates in,
@@ -1237,7 +1237,8 @@ object DedupQueries {
         // side is only the duplicated keys — bounded per partition
         // (|dup windows| / shuffle.partitions × 16 bytes) even on a
         // fully-duplicated corpus. Measured 52 s SMJ → 36 s SHJ at
-        // 500k (Dd15StageProbe).
+        // 500k (SCALING.md, "Round 15: the ExactSubstr family
+        // re-engineered", lever 3).
         // checkpointed: nDup and covered both read it, and each lazy
         // reference re-ran the digest stream AND the dup aggregation
         // (the dd03 small-frame checkpoint rule: dup windows are
@@ -1303,7 +1304,7 @@ object DedupQueries {
 
     CatalogQuery(
       "dd16_cc_star",
-      "Connected components by alternating large/small-star contraction (O(log n) rounds on ANY topology — the chain-robust scale path to dd08's diameter-bound propagation); same cosine >= 0.4 edges, same min-id labels",
+      "Connected components by alternating large/small-star contraction (O(log n) rounds on ANY topology, chain-robust); same cosine >= 0.4 edges, same min-id labels and same kernel as dd08",
       (s, dir) => {
         // identical input graph, output contract and CC kernel as
         // dd08: star contraction's round count is O(log n) regardless

@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   * once at build, and each day pays batch window-signing plus ONE pass
   * over the bucketed 16-byte-key scan — IO ∝ index size but no corpus
   * re-sign, no distinct fold, and no shuffle of the standing side
-  * (SubstrIndexProbe at 500k: 32.5 s in-query vs 3.2-3.6 s probe,
+  * (500k, SCALING.md "The ExactSubstr standing index": 32.5 s
+  * in-query vs 3.2-3.6 s probe,
   * near-flat between 0.1 % and 1 % batches because the key-scan floor
   * dominates at those sizes; the batch term takes over as batches
   * grow). Acceptance appends only the batch's genuinely new keys (an

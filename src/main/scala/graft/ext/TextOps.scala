@@ -70,15 +70,15 @@ object TextOps {
     * contain an n-token window); callers wanting the whole-text
     * fallback use `wordShingleRows`.
     *
-    * Generator shape — the third measured design (ShingleAbProbe,
-    * 36.7M windows at the 500k headroom corpus, value-identical
-    * outputs): a typed mapPartitions sliding builder over the
-    * materialized token array, 7.96 s vs 11.9 s for the
-    * transform/slice lambda (higher-order lambdas evaluate
-    * interpreted) vs 18.9 s for the rounds-1-14 posexplode +
-    * per-doc lead-window pass — which also cost a full shuffle+sort
-    * of the token stream and put a Window between the scan and every
-    * downstream consumer. mapPartitions is the documented last
+    * Generator shape — the third measured design (SCALING.md, "Round
+    * 15: the ExactSubstr family re-engineered", lever 2: 36.7M windows
+    * at the 500k headroom corpus, value-identical outputs): a typed
+    * mapPartitions sliding builder over the materialized token array,
+    * 7.96 s vs 11.9 s for the transform/slice lambda (higher-order
+    * lambdas evaluate interpreted) vs 18.9 s for the rounds-1-14
+    * posexplode + per-doc lead-window pass — which also cost a full
+    * shuffle+sort of the token stream and put a Window between the scan
+    * and every downstream consumer. mapPartitions is the documented last
     * resort, earned here: each row is one whole document, the window
     * build is a per-row imperative loop no codegen'd expression
     * expresses without either a shuffle (lead) or interpreted lambdas
@@ -131,10 +131,11 @@ object TextOps {
     * lanes over the window text, carried as TWO FLAT LONG columns
     * (h1, h2). Replaces the md5 hex-string key in the ExactSubstr
     * family's internal aggregations and joins (dd15/dd20/tx17/dd23):
-    * Dd15StageProbe at the 500k headroom corpus (36.7M windows)
-    * measured the dup aggregation at 42 s on string keys vs 23 s on
-    * the flat long pair, and the digest join-back at 122 s (string
-    * SMJ) vs 52 s (flat SMJ) vs 36 s (flat shuffle-hash) — flat, not
+    * the 500k headroom corpus (36.7M windows; SCALING.md, "Round 15:
+    * the ExactSubstr family re-engineered", lever 3) measured the dup
+    * aggregation at 42 s on string keys vs 23 s on the flat long pair,
+    * and the digest join-back at 122 s (string SMJ) vs 52 s (flat SMJ)
+    * vs 36 s (flat shuffle-hash) — flat, not
     * a two-long struct, because struct grouping keys hash and compare
     * interpreted (struct spelling measured no better than strings).
     *

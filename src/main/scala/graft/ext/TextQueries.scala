@@ -1099,9 +1099,10 @@ object TextQueries {
         // (source, shingle) rows, per-source set sizes, pairwise
         // intersections via a self-join on the shingle key. The
         // shingle is carried as the two-long (h1, h2) window key from
-        // the moment it leaves the generator — the Dd15StageProbe
-        // receipts (string keys 2-4x slower to hash/sort through
-        // aggregation and join) applied to tx21's three string-keyed
+        // the moment it leaves the generator — the round-15 key-shape
+        // receipts in SCALING.md ("Round 15: the ExactSubstr family
+        // re-engineered", lever 3: string keys 2-4x slower to hash/sort
+        // through aggregation and join) applied to tx21's three string-keyed
         // exchanges (doc_id join-back, distinct, self-join), and the
         // key never reaches the output so md5-portability doesn't
         // bind; the lanes are independent (TextOps.windowKey2's

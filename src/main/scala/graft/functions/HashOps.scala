@@ -24,9 +24,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * reads the segment bytes big-endian, skipping every intermediate
   * string. Same value, so every existing DuckDB oracle
   * (`('0x' || substr(md5(el), 1+8*k, 8))::BIGINT`) holds unchanged.
-  * Measured A/B vs the conv spelling: SCALING.md round 11
-  * (HashAbProbe: wash at the sf0.1 fixture's 1.47M grams, 2-5x
-  * faster at 8x that corpus — the win grows with scale).
+  * Measured A/B vs the conv spelling: SCALING.md, "md5_seg32 vs
+  * conv/substring — the honest A/B" (a wash at the sf0.1 fixture's
+  * 1.47M grams, 2-5x faster at 8x that corpus — the win grows with
+  * scale).
   *
   * `seg` ∈ [0, 3] (md5 is 16 bytes = 4 segments). Null in → null out.
   */

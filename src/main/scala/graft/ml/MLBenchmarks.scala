@@ -186,12 +186,7 @@ object MLBenchmarksRunner {
   * algorithms once at default params, one JSON line per result. */
 object RunMLBenchmark {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create()
     spark.sparkContext.setLogLevel("WARN")
     args.toSeq match {
       case Seq("--config", path, rest @ _*) =>

@@ -125,9 +125,9 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 }
 
-/** `spark.sql.extensions=graft.plans.GraftExtensions` (or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`)
-  * registers every graft planner extension; on a live session the
+/** `spark.sql.extensions=graft.plans.GraftExtensions` (which
+  * `graft.GraftSession` sets) registers every graft planner
+  * extension; on a live session the
   * runtime equivalents are `spark.experimental.extraOptimizations`
   * (the rule) and `spark.experimental.extraStrategies` (the
   * hypercube strategy). */

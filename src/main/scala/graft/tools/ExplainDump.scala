@@ -2,17 +2,14 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `.explain("formatted")` for named catalog queries to
   * files — the plans/rNN before/after receipts the optimization rounds
   * commit.
   *
   *   runMain graft.tools.ExplainDump -o plans/r17 -suffix _before [-d dir] <name>...
   *
-  * Uses the Bench session shape (cpus from SPARK_GRAFT_CPUS, shuffle
-  * partitions = cpus, GraftExtensions) so the dumped plan is the one
-  * the bench actually runs. The formatted explain is captured BEFORE
+  * Runs on `GraftSession`, so the dumped plan is the one the bench
+  * actually runs. The formatted explain is captured BEFORE
   * execution (AdaptiveSparkPlan isFinalPlan=false) — it shows join
   * strategies, exchanges, PushedFilters and ReadSchema, which is what
   * the receipts assert about.
@@ -33,22 +30,7 @@ object ExplainDump {
       case (a, i) if !flagIdxs.contains(i) => a
     }.toSeq
     require(names.nonEmpty, "usage: ExplainDump [-o dir] [-suffix s] [-d sfDir] <query>...")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // mirror Bench's env-gated plan-shaping configs (r18): without
-      // these the dumped plan is NOT the one the bench times (r17's
-      // dumps ran under Spark defaults — bloom on, SMJ preferred)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_RUNTIME_BLOOM", "false"))
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP", "128m"))
-      .getOrCreate()
+    val spark = graft.GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -10,9 +9,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   *   runMain graft.tools.JoinAudit [-d sfDir] <query>...
   *
-  * Session shape mirrors Bench (env-gated configs), so the strategies
-  * printed are the ones the bench times. Reads SPARK_GRAFT_PREFER_SMJ /
-  * SPARK_GRAFT_RUNTIME_BLOOM / SPARK_GRAFT_SHJ_LOCAL_MAP like Bench.
+  * Runs on `GraftSession`, so the strategies printed are the ones the
+  * bench times.
   */
 object JoinAudit {
   def main(args: Array[String]): Unit = {
@@ -21,19 +19,7 @@ object JoinAudit {
     val names = args.zipWithIndex.collect {
       case (a, i) if a != "-d" && (dIdx < 0 || i != dIdx + 1) => a
     }.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_RUNTIME_BLOOM", "false"))
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP", "128m"))
-      .getOrCreate()
+    val spark = graft.GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.listenerManager.register(new QueryExecutionListener {

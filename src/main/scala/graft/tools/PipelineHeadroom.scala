@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: measure the pipeline operators at corpus scales far above
@@ -33,9 +32,7 @@ object PipelineHeadroom {
         "ss04_ann_filtered", "ss05_ann_quantized", "dd08_dedup_clusters",
         "dd10_dedup_clusters_lsh", "dd11_incremental_dedup")
     val dir = s"/tmp/graft-headroom-$n"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
 
     if (!new java.io.File(s"$dir/documents.parquet").exists()) {

@@ -56,8 +56,10 @@ object TpcdsOracle {
   private val exactNames = Seq("q4", "q11", "q31", "q74")
 
   /** Spark's derived division type for the growth predicates, measured
-    * on Spark 4.1 (tools.SchemaProbe): DECIMAL(26,2)/(26,2) — the
-    * q4/q11 `sum(ext_list - ext_discount)` totals — divides at
+    * on Spark 4.1 by selecting these divisions directly (the oracle
+    * gate's q4/q11/q74 checks fail if an upgrade moves them):
+    * DECIMAL(26,2)/(26,2) — the q4/q11 `sum(ext_list - ext_discount)`
+    * totals — divides at
     * DECIMAL(38,12); DECIMAL(25,2)/(25,2) — q74's `sum(net_paid)` —
     * at DECIMAL(38,13). Rounding is HALF_UP (probed at an exact tie:
     * 0.01/2e10 → 1E-12, where HALF_EVEN would give 0). */

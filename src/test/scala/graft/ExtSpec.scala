@@ -2128,15 +2128,26 @@ class ExtSpec extends SparkSpec {
     assert(got(5L) == ((5L, 0L, 0L, 0L, 1L)), s"doc5: ${got(5L)}")
   }
 
-  test("dd16 star contraction: label-parity with dd08's propagation; O(log n) rounds on a 200-node path") {
+  test("dd16 star contraction: labels match a driver-side union-find; O(log n) rounds on a 200-node path") {
     import spark.implicits._
-    // 1) engine parity on the fixture graph: identical (vec_id,
-    // component) rows from both CC engines
-    val viaStar = run("dd16_cc_star")
-    val viaProp = run("dd08_dedup_clusters")
-    assert(viaStar.except(viaProp).count() == 0 &&
-      viaProp.except(viaStar).count() == 0,
-      "star contraction and min-label propagation disagree on labels")
+    // 1) on the fixture graph, dd16's (vec_id, component) rows equal an
+    // independent driver-side union-find over the dd06 pair set
+    val pairs = run("dd06_embedding_neardup").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val expected = parent.keys.map(v => v -> find(v)).toMap
+    val got = run("dd16_cc_star").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(expected.nonEmpty && got == expected,
+      "star contraction and the union-find disagree on labels")
     // 2) the shape that motivates the algorithm: a path graph of
     // diameter 199 — min-label would need ~199 rounds (far past its
     // round guard); star contraction must finish in O(log n)

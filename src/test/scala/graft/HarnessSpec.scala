@@ -126,4 +126,42 @@ class HarnessSpec extends SparkSpec {
     // every pinned floor respects the >= 0.5s jitter cutoff
     assert(BenchFloors.floors.values.forall(_ >= 0.5))
   }
+
+  test("GraftSession conf: plan-shaping defaults, env overrides, partitions = master cores") {
+    val plan = Seq(
+      ("spark.sql.optimizer.runtime.bloomFilter.enabled", "SPARK_GRAFT_RUNTIME_BLOOM", "false", "true"),
+      ("spark.sql.join.preferSortMergeJoin", "SPARK_GRAFT_PREFER_SMJ", "true", "false"),
+      ("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "SPARK_GRAFT_SHJ_LOCAL_MAP", "128m", "64m"))
+    def cores(c: Map[String, String]): String =
+      "local\\[(\\d+)\\]".r.findFirstMatchIn(c("spark.master")).get.group(1)
+    val base = GraftSession.conf(Map.empty).toMap
+    plan.foreach { case (key, _, default, _) => assert(base(key) == default, key) }
+    assert(base("spark.sql.extensions") == "graft.plans.GraftExtensions")
+    assert(base("spark.sql.shuffle.partitions") == cores(base))
+    // each env var moves its own entry and no other
+    plan.foreach { case (key, envVar, _, value) =>
+      val c = GraftSession.conf(Map(envVar -> value)).toMap
+      assert(c == base.updated(key, value), s"$envVar")
+    }
+    val seven = GraftSession.conf(Map("SPARK_GRAFT_CPUS" -> "7")).toMap
+    assert(cores(seven) == "7" && seven("spark.sql.shuffle.partitions") == "7")
+    // Bench's "conf" JSON reports the labels in this order
+    assert(GraftSession.planConfs.map(_.label) == Seq("preferSMJ", "runtimeBloom", "shjLocalMap"))
+  }
+
+  test("GraftSession.scala holds the only SparkSession.builder( in src/main") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isRegularFile(root.resolve("graft/GraftSession.scala")),
+      s"scan root ${root.toAbsolutePath} does not hold GraftSession.scala")
+    val walk = Files.walk(root)
+    val offenders = try walk.iterator.asScala.filter { (p: Path) =>
+      p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "GraftSession.scala" &&
+        Files.readString(p).contains("SparkSession.builder(")
+    }.toList finally walk.close()
+    assert(offenders.isEmpty,
+      s"build sessions through graft.GraftSession, not in: ${offenders.mkString(", ")}")
+  }
 }
