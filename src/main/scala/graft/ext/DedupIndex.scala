@@ -1,15 +1,14 @@
 package graft.ext
 
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted banded-LSH dedup index: the storage artifact dd17's probe
   * and [[graft.streaming.DocsStream]] describe in prose — the standing
-  * corpus's (doc_id, band, bucket) rows as a BUCKETED managed table, so
-  * that the daily probe's (band, bucket) equi-join reads the index side
-  * pre-partitioned (Spark's bucketed-scan path: no Exchange above the
-  * index scan) and appending an accepted batch preserves the bucketing.
+  * corpus's (doc_id, band, bucket) rows in the [[BucketedIndex]] layout
+  * keyed on (band, bucket), so that the daily probe's equi-join reads
+  * the index side pre-partitioned and pb-pruned, and appending an
+  * accepted batch preserves the bucketing.
   *
   * The index stores buckets only, not shingles: verification re-derives
   * shingle sets for exactly the CANDIDATE history docs (a semi-join
@@ -27,11 +26,6 @@ object DedupIndex {
   val Hashes = 36
   val RowsPerBand = 6
 
-  /** Same table-property key as [[SubstrIndex.PbProp]] — the pb
-    * partition modulus, written at build, read back by
-    * probe/append/compact so none can disagree with the files. */
-  val PbProp: String = SubstrIndex.PbProp
-
   /** The (doc_id, band, bucket) rows the index stores, derived from
     * (doc_id, text) docs — THE band/bucket derivation, shared by
     * build/append and by the streaming admission's state side so the
@@ -41,139 +35,34 @@ object DedupIndex {
       TextOps.wordShingleRows(docs, "doc_id", "text", 3),
       "doc_id", Hashes, RowsPerBand)
 
-  /** pb partition column: xxhash64 of the bucket key mod nParts —
-    * a DIFFERENT hash family than the murmur3 Spark's bucketed writer
-    * uses on (band, bucket), so the partition and the file-bucket
-    * dimensions stay independent (a shared family would collapse each
-    * pb partition into a single file bucket). */
-  private def pbCol(nParts: Int) =
-    pmod(xxhash64(col("band"), col("bucket")), lit(nParts.toLong))
-      .cast("int").as("pb")
+  /** The index's layout: (doc_id) payload keyed on (band, bucket),
+    * partitioned on xxhash64 of the bucket key. */
+  private val layout = BucketedIndex(Seq("band", "bucket"),
+    Seq("doc_id"), xxhash64(col("band"), col("bucket")))
 
-  /** Spark's native bucket id for (band, bucket) — murmur3 of the
-    * bucket columns mod the bucket count, the writer's own function —
-    * so pre-shuffling on (pb, bucket id) yields ONE file per
-    * (partition, bucket) group per write. */
-  private def bucketIdCol(nBuckets: Int) =
-    pmod(hash(col("band"), col("bucket")), lit(nBuckets))
-
-  private def write(rows: DataFrame, table: String, nBuckets: Int,
-      nParts: Int, mode: String): Unit =
-    rows.select(col("doc_id"), col("band"), col("bucket"), pbCol(nParts))
-      .repartition(col("pb"), bucketIdCol(nBuckets))
-      .write.mode(mode).format("parquet")
-      .partitionBy("pb")
-      .bucketBy(nBuckets, "band", "bucket").sortBy("band", "bucket")
-      .saveAsTable(table)
-
-  private def setPbProp(spark: SparkSession, table: String,
-      nParts: Int): Unit =
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-      s"('$PbProp' = '$nParts')")
-
-  /** The table's pb modulus, from its properties (None for a pre-pb
-    * table — probe then falls back to the unpruned full scan and
-    * append to the unpartitioned layout). */
-  private[graft] def pbMod(spark: SparkSession, table: String): Option[Int] =
-    spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table)).properties
-      .get(PbProp).map(_.toInt)
-
-  /** Create/overwrite the index table from a corpus of (doc_id, text).
-    * Partitioned on pb and bucketed AND sorted by (band, bucket): the
-    * probe join and the bucket-size stats aggregate both run
-    * shuffle-free on the index side, and a small batch's probe
-    * partition-prunes the scan to the pb values its own buckets hash
-    * to ([[SubstrIndex]]'s layout applied to the LSH index — same
-    * honest envelope: 6 buckets per batch doc, so pruning bites while
-    * 6·|batch| ≲ nParts and degrades to the full one-pass bucketed
-    * scan for bulk batches). */
+  /** Create/overwrite the index table from a corpus of (doc_id, text). */
   def build(docs: DataFrame, table: String, nBuckets: Int = 8,
-      nParts: Int = 64): Unit = {
-    write(bucketRows(docs), table, nBuckets, nParts, "overwrite")
-    setPbProp(docs.sparkSession, table, nParts)
-  }
+      nParts: Int = 64): Unit =
+    layout.build(bucketRows(docs), table, nBuckets, nParts)
 
-  /** Append an accepted batch's buckets (partition/bucket spec read
-    * back from the catalog so a mismatched parameter cannot silently
-    * break the bucketed-join property — the DocsStream admission
-    * loop's state-append as a table operation). A pre-pb table keeps
-    * its unpartitioned layout. */
-  def append(docs: DataFrame, table: String, nBuckets: Int = 8): Unit = {
-    val spark = docs.sparkSession
-    val nB = spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(nBuckets)
-    pbMod(spark, table) match {
-      case Some(nParts) => write(bucketRows(docs), table, nB, nParts, "append")
-      case None =>
-        bucketRows(docs).write.mode("append").format("parquet")
-          .bucketBy(nB, "band", "bucket").sortBy("band", "bucket")
-          .saveAsTable(table)
-    }
-  }
+  /** Append an accepted batch's buckets under the table's own layout —
+    * the DocsStream admission loop's state-append as a table
+    * operation. */
+  def append(docs: DataFrame, table: String): Unit =
+    layout.append(bucketRows(docs), table)
 
-  /** Rewrite the table under its own partition/bucket spec, folding
-    * the one-file-set-per-append accumulation back to one file per
-    * (pb, bucket) group — the lifecycle twin of
-    * [[graft.ext.SubstrIndex.compact]]: file COUNT, not data size, is
-    * what years of daily acceptance appends degrade. Content-identical
-    * by construction (read-rewrite through a staging table swapped in
-    * at the catalog); DedupIndexSpec pins rebuild equivalence, probe
-    * parity, the layout, and the file-count bound. */
-  def compact(spark: SparkSession, table: String): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      TableIdentifier(table))
-    val nBuckets = meta.bucketSpec.map(_.numBuckets).getOrElse(8)
-    val tmp = table + "__compact"
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    val rows = spark.table(table).select("doc_id", "band", "bucket")
-    pbMod(spark, table) match {
-      case Some(nParts) =>
-        write(rows, tmp, nBuckets, nParts, "overwrite")
-        setPbProp(spark, tmp, nParts)
-      case None =>
-        rows.repartition(bucketIdCol(nBuckets))
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(nBuckets, "band", "bucket").sortBy("band", "bucket")
-          .saveAsTable(tmp)
-    }
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    // the rename moves the data dir but the catalog's PARTITION
-    // entries still point at the staging path — re-list them
-    spark.sql(s"MSCK REPAIR TABLE $table")
-  }
-
-  /** The standing bucket scan narrowed to the pb partitions
-    * `batchBuckets` (any frame carrying band/bucket) can possibly
-    * hit: the batch's distinct pb values — ≤ nParts, a bounded driver
-    * list, the ss11/e09 precedent — as a literal partition filter.
-    * Pruning keeps whole (band, bucket) groups (every row of a group
-    * shares its pb), so the flood-cap counts on the pruned frame stay
-    * exact for every bucket the batch can reach. Falls back to the
-    * full scan for a pre-pb table. */
-  private[graft] def prunedBuckets(spark: SparkSession, table: String,
-      batchBuckets: DataFrame): DataFrame = {
-    val idx = spark.table(table)
-    val out = pbMod(spark, table) match {
-      case Some(nParts) if idx.columns.contains("pb") =>
-        val pbs = batchBuckets.select(pbCol(nParts)).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        if (pbs.isEmpty) idx.where(lit(false))
-        else if (pbs.size == nParts) idx // bulk batch covers every
-        else idx.where(col("pb").isin(pbs: _*)) // partition: skip the
-      case _ => idx                             // pointless IN filter
-    }
-    out.select(col("doc_id"), col("band"), col("bucket"))
-  }
+  /** Fold the per-append file sets back to one file per (pb, bucket)
+    * group ([[BucketedIndex.compact]]); DedupIndexSpec pins rebuild
+    * equivalence, probe parity, the layout, and the file-count bound. */
+  def compact(spark: SparkSession, table: String): Unit =
+    layout.compact(spark, table)
 
   /** Near-dup pairs of `batch` against the persisted index: banded
     * candidates (flooded index buckets collapse to their min-id
     * representative, dd17's bounded-work rule), then exact-Jaccard
     * verification against shingle sets re-derived from `corpus` for
     * candidate hist ids ONLY. The index side reads bucketed AND
-    * partition-pruned to the batch's own pb values ([[prunedBuckets]]).
+    * partition-pruned to the batch's own pb values.
     * `extraBuckets`: standing rows joined UNPRUNED and in full — the
     * streaming admission's days-sized un-promoted state — so the
     * flood cap counts across index ∪ extra exactly as the in-query
@@ -191,7 +80,7 @@ object DedupIndex {
     val bb = TextOps.bandBucketRows(batchRows, "doc_id", Hashes, RowsPerBand)
       .select(col("band"), col("bucket"), col("doc_id").as("batch_id"))
       .localCheckpoint(true) // read twice: pb collection + the probe join
-    val standing = extraBuckets.foldLeft(prunedBuckets(spark, table, bb)) {
+    val standing = extraBuckets.foldLeft(layout.prunedScan(spark, table, bb)) {
       (idx, extra) =>
         idx.union(extra.select(col("doc_id"), col("band"), col("bucket")))
     }

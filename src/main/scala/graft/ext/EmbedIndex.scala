@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,10 +12,7 @@ import org.apache.spark.sql.functions._
   * sorted on tsig so the daily probe's bucket join reads the index
   * side pre-partitioned, and additionally partitioned on
   * `pb = xxhash64(tsig) mod nParts` so a trickle batch's probe
-  * partition-prunes the scan (each batch vector signs into exactly
-  * [[SimilarityQueries.NdTables]] buckets, so pruning bites while
-  * NdTables·|batch| ≲ nParts and degrades to the full one-pass
-  * bucketed scan for bulk batches).
+  * partition-prunes the scan (the [[BucketedIndex]] layout).
   *
   * Unlike [[DedupIndex]] the verification payload (the 64-dim
   * normalized vector, ~512 bytes) lives IN the index row — no side
@@ -34,9 +30,6 @@ object EmbedIndex {
   /** dd12's verification threshold, re-exported for the streaming
     * admission (the catalog constant is package-private). */
   val Threshold: Double = SimilarityQueries.NdThreshold
-
-  /** Same table-property key as [[SubstrIndex.PbProp]]. */
-  val PbProp: String = SubstrIndex.PbProp
 
   /** Normalize raw (vec_id, embedding) rows to the (vec_id, v) frame
     * every probe/build consumes — cosine thereafter is a plain dot. */
@@ -58,89 +51,28 @@ object EmbedIndex {
       .reduce(_ union _)
   }
 
-  private def pbCol(nParts: Int) =
-    pmod(xxhash64(col("tsig")), lit(nParts.toLong)).cast("int").as("pb")
-
-  /** Spark's own bucket id (murmur3(tsig) mod n) — pre-shuffling on
-    * (pb, bucket id) yields one file per (partition, bucket) group. */
-  private def bucketIdCol(nBuckets: Int) =
-    pmod(hash(col("tsig")), lit(nBuckets))
-
-  private def write(rows: DataFrame, table: String, nBuckets: Int,
-      nParts: Int, mode: String): Unit =
-    rows.select(col("vec_id"), col("v"), col("tsig"), pbCol(nParts))
-      .repartition(col("pb"), bucketIdCol(nBuckets))
-      .write.mode(mode).format("parquet")
-      .partitionBy("pb")
-      .bucketBy(nBuckets, "tsig").sortBy("tsig")
-      .saveAsTable(table)
-
-  private def setPbProp(spark: SparkSession, table: String,
-      nParts: Int): Unit =
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-      s"('$PbProp' = '$nParts')")
-
-  private[graft] def pbMod(spark: SparkSession, table: String): Option[Int] =
-    spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table)).properties
-      .get(PbProp).map(_.toInt)
+  /** The index's layout: (vec_id, v) payload keyed on tsig,
+    * partitioned on xxhash64(tsig). */
+  private val layout = BucketedIndex(Seq("tsig"), Seq("vec_id", "v"),
+    xxhash64(col("tsig")))
 
   /** Create/overwrite the index from a (vec_id, v) corpus (normalized
     * — pass raw rows through [[normalized]] first). */
   def build(vecs: DataFrame, table: String, nBuckets: Int = 8,
-      nParts: Int = 64): Unit = {
-    write(sigRows(vecs), table, nBuckets, nParts, "overwrite")
-    setPbProp(vecs.sparkSession, table, nParts)
-  }
+      nParts: Int = 64): Unit =
+    layout.build(sigRows(vecs), table, nBuckets, nParts)
 
-  /** Append an accepted batch's rows (partition/bucket spec read back
-    * from the catalog). Idempotence lives one level up:
+  /** Append an accepted batch's rows under the table's own layout.
+    * Idempotence lives one level up:
     * [[graft.streaming.EmbedStream.promoteEmbedState]] anti-joins on
     * vec_id against the table before calling this. */
-  def append(vecs: DataFrame, table: String, nBuckets: Int = 8): Unit = {
-    val spark = vecs.sparkSession
-    val nB = spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(nBuckets)
-    write(sigRows(vecs), table, nB, pbMod(spark, table).getOrElse(64),
-      "append")
-  }
+  def append(vecs: DataFrame, table: String): Unit =
+    layout.append(sigRows(vecs), table)
 
-  /** Rewrite the table under its own partition/bucket spec — one file
-    * per (pb, bucket) group, the [[SubstrIndex.compact]] lifecycle. */
-  def compact(spark: SparkSession, table: String): Unit = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      TableIdentifier(table))
-    val nBuckets = meta.bucketSpec.map(_.numBuckets).getOrElse(8)
-    val nParts = pbMod(spark, table).getOrElse(64)
-    val tmp = table + "__compact"
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    write(spark.table(table).select(col("vec_id"), col("v"), col("tsig")),
-      tmp, nBuckets, nParts, "overwrite")
-    setPbProp(spark, tmp, nParts)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    spark.sql(s"MSCK REPAIR TABLE $table")
-  }
-
-  /** The standing scan narrowed to the pb partitions `batchSigs` can
-    * hit (≤ nParts distinct values, a bounded driver list). Pruning
-    * keeps whole tsig buckets, so the flood cap stays exact for every
-    * bucket the batch can reach. Falls back for a pre-pb table. */
-  private[graft] def prunedRows(spark: SparkSession, table: String,
-      batchSigs: DataFrame): DataFrame = {
-    val idx = spark.table(table)
-    val out = pbMod(spark, table) match {
-      case Some(nParts) if idx.columns.contains("pb") =>
-        val pbs = batchSigs.select(pbCol(nParts)).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        if (pbs.isEmpty) idx.where(lit(false))
-        else if (pbs.size == nParts) idx
-        else idx.where(col("pb").isin(pbs: _*))
-      case _ => idx
-    }
-    out.select(col("vec_id"), col("v"), col("tsig"))
-  }
+  /** Fold the per-append file sets back to one file per (pb, bucket)
+    * group ([[BucketedIndex.compact]]). */
+  def compact(spark: SparkSession, table: String): Unit =
+    layout.compact(spark, table)
 
   /** Near-dup pairs of `batch` (vec_id, v) against the persisted
     * index — partition-pruned to the batch's own pb values, with
@@ -152,7 +84,7 @@ object EmbedIndex {
       extraRows: Option[DataFrame] = None): DataFrame = {
     val bsig = sigRows(batch)
       .localCheckpoint(true) // read twice: pb collection + bucket join
-    val standing = extraRows.foldLeft(prunedRows(spark, table, bsig)) {
+    val standing = extraRows.foldLeft(layout.prunedScan(spark, table, bsig)) {
       (idx, extra) =>
         idx.union(extra.select(col("vec_id"), col("v"), col("tsig")))
     }

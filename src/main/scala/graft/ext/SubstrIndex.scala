@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,22 +29,9 @@ import org.apache.spark.sql.functions._
   * anti-join against the standing set, so the table stays a SET and
   * probe counts stay exact).
   *
-  * PARTITION PRUNING (the sub-key-scan path): the table additionally
-  * partitions on `pb = pmod(h1, nParts)` and the probe attaches the
-  * batch's distinct pb values — a driver list BOUNDED by nParts, the
-  * ss11/e09 bounded-collect precedent — as a literal partition filter,
-  * so probe IO is ∝ partitions the batch actually touches. Honest
-  * envelope: the keys are hashes, so a batch with n distinct keys
-  * touches ≈ nParts·(1 − (1 − 1/nParts)^n) partitions — pruning wins
-  * exactly when n ≲ nParts (the interactive "is THIS document already
-  * known?" path, trickle ingestion, per-tenant micro-batches) and
-  * degrades gracefully to the full one-pass key scan for bulk daily
-  * batches (n ≫ nParts), which remains the design floor. nParts is a
-  * BUILD-time layout choice recorded in the table properties
-  * (probe/append read it back); size it to the expected probe profile
-  * — a few hundred keys per doc means nParts ≈ 10–100× the typical
-  * probe's distinct-key count, bounded by the file-count budget
-  * (build writes exactly one file per (pb, bucket)).
+  * The table additionally partitions on `pb = pmod(h1, nParts)`, so a
+  * trickle batch's probe reads only the partitions its own keys hash to
+  * ([[BucketedIndex]] holds the layout and its pruning envelope).
   *
   * The index stores keys only — 16 bytes a window, no text, no
   * positions: the probe's contract is dd25's (known-window counting +
@@ -56,11 +42,6 @@ object SubstrIndex {
 
   /** dd15/dd20/dd25's window width. */
   val K = 8
-
-  /** Table property recording the pb partition modulus — part of the
-    * on-disk layout, written at build, read back by probe/append/
-    * compact so the three can never disagree with the files. */
-  val PbProp = "graft.pb.mod"
 
   /** (doc_id, h1, h2) per window OCCURRENCE — multiplicity kept (span
     * accounting, dd15's convention: a window repeated inside a doc
@@ -76,46 +57,17 @@ object SubstrIndex {
   def keySet(docs: DataFrame): DataFrame =
     windowKeys(docs).select(col("h1"), col("h2")).distinct()
 
-  private def pbCol(nParts: Int) =
-    pmod(col("h1"), lit(nParts.toLong)).cast("int").as("pb")
-
-  /** Spark's native bucket id for (h1, h2) — Murmur3 of the bucket
-    * columns mod the bucket count, the exact function the writer
-    * uses — so pre-shuffling on (pb, bucket id) yields ONE file per
-    * (partition, bucket) instead of one per (task, partition, bucket). */
-  private def bucketIdCol(nBuckets: Int) =
-    pmod(hash(col("h1"), col("h2")), lit(nBuckets))
-
-  private def write(keys: DataFrame, table: String, nBuckets: Int,
-      nParts: Int, mode: String): Unit =
-    keys.select(col("h1"), col("h2"), pbCol(nParts))
-      .repartition(col("pb"), bucketIdCol(nBuckets))
-      .write.mode(mode).format("parquet")
-      .partitionBy("pb")
-      .bucketBy(nBuckets, "h1", "h2").sortBy("h1", "h2")
-      .saveAsTable(table)
-
-  private def setPbProp(spark: SparkSession, table: String,
-      nParts: Int): Unit =
-    spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-      s"('$PbProp' = '$nParts')")
-
-  /** The table's pb modulus, from its properties (None for a pre-pb
-    * table — probe then falls back to the unpruned full key scan). */
-  private[graft] def pbMod(spark: SparkSession, table: String): Option[Int] =
-    spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table)).properties
-      .get(PbProp).map(_.toInt)
+  /** The index's layout: the (h1, h2) key alone, partitioned on h1
+    * (already an xxhash64 lane). */
+  private[graft] val layout = BucketedIndex(Seq("h1", "h2"), Nil, col("h1"))
 
   /** Create/overwrite the index from a corpus of (doc_id, text): the
     * corpus's distinct window keys, partitioned on pb and
     * bucketed+sorted on the key. The one cost ∝ corpus; everything
     * after is ∝ batch (plus the pruned share of the key scan). */
   def build(docs: DataFrame, table: String, nBuckets: Int = 8,
-      nParts: Int = 64): Unit = {
-    write(keySet(docs), table, nBuckets, nParts, "overwrite")
-    setPbProp(docs.sparkSession, table, nParts)
-  }
+      nParts: Int = 64): Unit =
+    layout.build(keySet(docs), table, nBuckets, nParts)
 
   /** Append an ACCEPTED batch's window keys — only the genuinely new
     * ones (anti-join against the standing set, the index side of which
@@ -123,50 +75,21 @@ object SubstrIndex {
     * partitions: a fresh key's partition is by construction one the
     * batch touches), so the table stays a set: a key already present
     * would otherwise double every later probe count for windows it
-    * carries. Same partition/bucket spec, so both storage properties
-    * survive ingestion. */
-  def append(docs: DataFrame, table: String, nBuckets: Int = 8): Unit =
-    appendKeys(keySet(docs), table, nBuckets)
+    * carries. The table's own partition/bucket spec, so both storage
+    * properties survive ingestion. */
+  def append(docs: DataFrame, table: String): Unit =
+    appendKeys(keySet(docs), table)
 
   /** [[append]] for an already-derived key frame (the streaming
     * admission's accepted state, a replayed batch's keys): same
     * anti-join-against-standing set discipline, so re-appending keys
     * the table already holds — a crashed promotion retried, an
     * out-of-band duplicate feed — is a no-op, not a corruption. */
-  def appendKeys(keys: DataFrame, table: String, nBuckets: Int = 8): Unit = {
-    val spark = keys.sparkSession
+  def appendKeys(keys: DataFrame, table: String): Unit = {
     val ks = keys.select(col("h1"), col("h2")).distinct()
       .localCheckpoint(true) // read twice: pbs + anti-join
-    val nParts = pbMod(spark, table).getOrElse(64)
-    // the table's own bucket spec wins over the parameter — an append
-    // under a mismatched spec would silently break the bucketed-join
-    // property every probe relies on
-    val nB = spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets).getOrElse(nBuckets)
-    val standing = prunedKeys(spark, table, ks)
-    write(ks.join(standing, Seq("h1", "h2"), "left_anti"),
-      table, nB, nParts, "append")
-  }
-
-  /** The standing key scan narrowed to the partitions `batchKeys` can
-    * possibly hit: the batch's distinct pb values (≤ nParts, a bounded
-    * driver list) as a literal partition filter. Falls back to the
-    * full scan for a pre-pb table. */
-  private[graft] def prunedKeys(spark: SparkSession, table: String,
-      batchKeys: DataFrame): DataFrame = {
-    val idx = spark.table(table)
-    pbMod(spark, table) match {
-      case Some(nParts) if idx.columns.contains("pb") =>
-        val pbs = batchKeys.select(pbCol(nParts)).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val pruned =
-          if (pbs.isEmpty) idx.where(lit(false))
-          else if (pbs.size == nParts) idx // bulk batch covers every
-          else idx.where(col("pb").isin(pbs: _*)) // partition: skip the
-        pruned.select(col("h1"), col("h2"))       // pointless IN filter
-      case _ => idx.select(col("h1"), col("h2"))
-    }
+    val standing = layout.prunedScan(keys.sparkSession, table, ks)
+    layout.append(ks.join(standing, Seq("h1", "h2"), "left_anti"), table)
   }
 
   /** dd25's exact output (doc_id, n_tok, n_win, n_known, known_pct_e6,
@@ -182,7 +105,7 @@ object SubstrIndex {
     * SubstrIndexSpec pins value-parity with in-query dd25. */
   def probe(spark: SparkSession, table: String, batch: DataFrame): DataFrame = {
     val occ = windowKeys(batch).localCheckpoint(true)
-    probeOcc(prunedKeys(spark, table, occ), occ, batch)
+    probeOcc(layout.prunedScan(spark, table, occ), occ, batch)
   }
 
   /** [[probe]] against any standing key frame (a persisted index scan,
@@ -222,28 +145,10 @@ object SubstrIndex {
       .orderBy(col("doc_id"))
   }
 
-  /** Rewrite the table under its own partition/bucket spec, folding
-    * the one-file-set-per-append accumulation back to exactly one
-    * file per (pb, bucket) — the lifecycle operation years of daily
-    * appends need: file COUNT, not data size, is what degrades the
-    * key scan. Content-identical by construction (a straight
-    * read-rewrite through a staging table swapped in atomically at
-    * the catalog); SubstrIndexSpec pins compact == from-scratch
-    * build, probe parity, and the file-count bound. */
-  def compact(spark: SparkSession, table: String): Unit = {
-    val meta = spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table))
-    val nBuckets = meta.bucketSpec.map(_.numBuckets).getOrElse(8)
-    val nParts = pbMod(spark, table).getOrElse(64)
-    val tmp = table + "__compact"
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    write(spark.table(table).select(col("h1"), col("h2")),
-      tmp, nBuckets, nParts, "overwrite")
-    setPbProp(spark, tmp, nParts)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    // the rename moves the data dir but the catalog's PARTITION
-    // entries still point at the staging path — re-list them
-    spark.sql(s"MSCK REPAIR TABLE $table")
-  }
+  /** Fold the per-append file sets back to exactly one file per
+    * (pb, bucket) ([[BucketedIndex.compact]]); SubstrIndexSpec pins
+    * compact == from-scratch build, probe parity, and the file-count
+    * bound. */
+  def compact(spark: SparkSession, table: String): Unit =
+    layout.compact(spark, table)
 }

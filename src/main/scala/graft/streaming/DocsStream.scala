@@ -445,7 +445,7 @@ object DocsStream {
       decisionsDir: String,
       checkpointDir: String): StreamingQuery =
     substrAdmissionWith(spark, docs,
-      bKeys => graft.ext.SubstrIndex.prunedKeys(spark, indexTable, bKeys),
+      bKeys => graft.ext.SubstrIndex.layout.prunedScan(spark, indexTable, bKeys),
       stateDir, decisionsDir, checkpointDir)
 
   /** Shared admission loop: `initialFor` maps the batch's distinct

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{DedupIndex, TextOps}
+import graft.ext.{BucketedIndex, DedupIndex, EmbedIndex, SubstrIndex, TextOps}
 import graft.sources.Tables
 
 /** The persisted bucketed LSH index vs dd17's in-query probe. */
@@ -109,7 +109,7 @@ class DedupIndexSpec extends SparkSpec {
     // one file per touched (pb, bucket) group: bound = 64 pb × 8 buckets
     assert(after <= 64 * 8 && after < before,
       s"compact left $after files (before: $before, bound: ${64 * 8})")
-    assert(DedupIndex.pbMod(spark, "dedup_idx_cpt").contains(64),
+    assert(BucketedIndex.pbMod(spark, "dedup_idx_cpt").contains(64),
       "compact lost the pb modulus property")
     assert(rows("dedup_idx_cpt") == rowsBefore, "compact changed the bucket rows")
     assert(pairsBefore.nonEmpty && pairs() == pairsBefore,
@@ -186,5 +186,33 @@ class DedupIndexSpec extends SparkSpec {
     val selected = scans.head.selectedPartitions.partitionCount
     assert(selected <= 12 && selected < nPbDirs,
       s"probe read $selected of $nPbDirs partitions — pruning not effective")
+  }
+
+  test("probe, append and compact refuse a table that build did not write, naming it") {
+    import spark.implicits._
+    dropTable("plain_idx")
+    val docs = Seq((7L, (1 to 12).map(j => s"w$j").mkString(" ")))
+      .toDF("doc_id", "text")
+    // the index's own rows, written without its layout
+    DedupIndex.bucketRows(docs).write.format("parquet").saveAsTable("plain_idx")
+    val stored = spark.table("plain_idx").count()
+    val vecs = EmbedIndex.normalized(Tables.table(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding")).limit(2))
+    val calls: Seq[(String, () => Any)] = Seq(
+      "DedupIndex.probe" -> (() => DedupIndex.probe(spark, "plain_idx", docs, docs)),
+      "DedupIndex.append" -> (() => DedupIndex.append(docs, "plain_idx")),
+      "DedupIndex.compact" -> (() => DedupIndex.compact(spark, "plain_idx")),
+      "SubstrIndex.probe" -> (() => SubstrIndex.probe(spark, "plain_idx", docs)),
+      "SubstrIndex.append" -> (() => SubstrIndex.append(docs, "plain_idx")),
+      "SubstrIndex.compact" -> (() => SubstrIndex.compact(spark, "plain_idx")),
+      "EmbedIndex.probe" -> (() => EmbedIndex.probe(spark, "plain_idx", vecs)),
+      "EmbedIndex.append" -> (() => EmbedIndex.append(vecs, "plain_idx")),
+      "EmbedIndex.compact" -> (() => EmbedIndex.compact(spark, "plain_idx")))
+    calls.foreach { case (name, call) =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("table plain_idx is not a bucketed index"),
+        s"$name raised: ${e.getMessage}")
+    }
+    assert(spark.table("plain_idx").count() == stored, "a refused call changed the table")
   }
 }

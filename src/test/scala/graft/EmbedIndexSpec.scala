@@ -118,7 +118,7 @@ class EmbedIndexSpec extends SparkSpec {
     assert(after <= 64 * 8 && after < before,
       s"compact left $after files (before: $before, bound: ${64 * 8})")
     assert(rows("embed_idx_prune") == rowsBefore, "compact changed the rows")
-    assert(EmbedIndex.pbMod(spark, "embed_idx_prune").contains(64),
+    assert(graft.ext.BucketedIndex.pbMod(spark, "embed_idx_prune").contains(64),
       "compact lost the pb modulus property")
     assert(triples(EmbedIndex.probe(spark, "embed_idx_prune", batch)) == want,
       "compact changed probe pairs")

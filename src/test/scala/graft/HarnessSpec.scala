@@ -164,4 +164,24 @@ class HarnessSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"build sessions through graft.GraftSession, not in: ${offenders.mkString(", ")}")
   }
+
+  test("BucketedIndex.scala holds the only index-layout writes and catalog swaps in src/main") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isRegularFile(root.resolve("graft/ext/BucketedIndex.scala")),
+      s"scan root ${root.toAbsolutePath} does not hold BucketedIndex.scala")
+    val needles = Seq("partitionBy(\"pb\")", "TBLPROPERTIES", "RENAME TO", "MSCK REPAIR")
+    val walk = Files.walk(root)
+    val offenders = try walk.iterator.asScala.flatMap { (p: Path) =>
+      if (!p.toString.endsWith(".scala") ||
+          p.getFileName.toString == "BucketedIndex.scala") Nil
+      else {
+        val src = Files.readString(p)
+        needles.filter(src.contains).map(n => s"$p: $n")
+      }
+    }.toList finally walk.close()
+    assert(offenders.isEmpty,
+      s"write index tables through graft.ext.BucketedIndex, not in: ${offenders.mkString(", ")}")
+  }
 }

@@ -129,8 +129,8 @@ class SubstrIndexSpec extends SparkSpec {
     val mk = (lo: Long, hi: Long) => (lo until hi).map(i =>
       (i, (1 to 20).map(j => s"d${i}w$j").mkString(" "))).toDF("doc_id", "text")
     SubstrIndex.build(mk(0L, 60L), "substr_idx_cpt", nBuckets = 4, nParts = 8)
-    SubstrIndex.append(mk(60L, 120L), "substr_idx_cpt", nBuckets = 4)
-    SubstrIndex.append(mk(120L, 180L), "substr_idx_cpt", nBuckets = 4)
+    SubstrIndex.append(mk(60L, 120L), "substr_idx_cpt")
+    SubstrIndex.append(mk(120L, 180L), "substr_idx_cpt")
     def files(t: String): Int = {
       def walk(f: java.io.File): Int =
         if (f.isDirectory) f.listFiles.map(walk).sum
@@ -155,7 +155,7 @@ class SubstrIndexSpec extends SparkSpec {
       "compact changed probe results")
     // layout survives the rewrite: pb modulus property + bucketed agg
     // still exchange-free + pruning still engages
-    assert(SubstrIndex.pbMod(spark, "substr_idx_cpt").contains(8))
+    assert(graft.ext.BucketedIndex.pbMod(spark, "substr_idx_cpt").contains(8))
     val agg = spark.table("substr_idx_cpt").groupBy(col("h1"), col("h2")).count()
     agg.collect()
     assert(!agg.queryExecution.executedPlan.toString
