@@ -17,14 +17,20 @@ import org.apache.spark.sql.functions._
   * the index stays minhash-narrow and the text fetch is bounded by the
   * batch's match count.
   *
-  * Same LSH constants as dd03/dd17 (36 hashes × 6 rows/band): a pair
-  * this probe reports is exactly a dd17 pair — DedupIndexSpec proves
-  * the persisted-index path emits the identical pair set.
+  * Same LSH constants as dd03/dd17 (36 hashes × 6 rows/band, bucket
+  * cap 100, Jaccard threshold 8/10): a pair this probe reports is
+  * exactly a dd17 pair — DedupIndexSpec proves the persisted-index path
+  * emits the identical pair set. The streaming near-dup admission
+  * ([[graft.streaming.DocsStream]]) reads the same five, so a doc it
+  * rejects is exactly a dd17 pair too.
   */
 object DedupIndex {
 
   val Hashes = 36
   val RowsPerBand = 6
+  val MaxBucket = 100
+  val ThreshNum = 8
+  val ThreshDen = 10
 
   /** The (doc_id, band, bucket) rows the index stores, derived from
     * (doc_id, text) docs — THE band/bucket derivation, shared by
@@ -72,9 +78,9 @@ object DedupIndex {
       table: String,
       batch: DataFrame,
       corpus: DataFrame,
-      maxBucketSize: Int = 100,
-      threshNum: Int = 8,
-      threshDen: Int = 10,
+      maxBucketSize: Int = MaxBucket,
+      threshNum: Int = ThreshNum,
+      threshDen: Int = ThreshDen,
       extraBuckets: Option[DataFrame] = None): DataFrame = {
     val batchRows = TextOps.wordShingleRows(batch, "doc_id", "text", 3)
     val bb = TextOps.bandBucketRows(batchRows, "doc_id", Hashes, RowsPerBand)
@@ -99,9 +105,9 @@ object DedupIndex {
       standingBuckets: DataFrame,
       batch: DataFrame,
       corpus: DataFrame,
-      maxBucketSize: Int = 100,
-      threshNum: Int = 8,
-      threshDen: Int = 10): DataFrame = {
+      maxBucketSize: Int = MaxBucket,
+      threshNum: Int = ThreshNum,
+      threshDen: Int = ThreshDen): DataFrame = {
     val batchRows = TextOps.wordShingleRows(batch, "doc_id", "text", 3)
     val bb = TextOps.bandBucketRows(batchRows, "doc_id", Hashes, RowsPerBand)
       .select(col("band"), col("bucket"), col("doc_id").as("batch_id"))

@@ -631,7 +631,7 @@ object SimilarityQueries {
   // least one of the L tables. Degenerate buckets (many identical
   // embeddings) are bounded by the cap + rep-chain guard regardless of
   // geometry — O(bucket) candidates through the bucket minimum, the
-  // exact-cosine verify gating every pair (TextOps.lshCandidates'
+  // exact-cosine verify gating every pair (TextOps.lshCandidatesFromRows'
   // semantics, re-used here for vectors).
   private[ext] val NdBits = 8
   private[ext] val NdTables = 8

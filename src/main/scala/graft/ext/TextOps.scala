@@ -27,14 +27,6 @@ object TextOps {
           i => concat_ws(" ", slice(t, i + 1, lit(n))))))
   }
 
-  /** Distinct character n-grams; whole text if shorter than n. */
-  def charNgrams(text: Column, n: Int): Column =
-    array_distinct(
-      when(length(text) < n, array(text))
-        .otherwise(transform(
-          sequence(lit(1), length(text) - (n - 1)),
-          i => text.substr(i, lit(n)))))
-
   /** (id, shingle) ROWS — the scale formulation of `wordShingles`:
     * one split per document (posexplode) and a window lead pass build
     * the n-token windows entirely in codegen, where the
@@ -257,10 +249,12 @@ object TextOps {
       .select(col(idCol), col("pos").cast("long").as("chunk_pos"),
         col("col").as("chunk_text"))
 
-  /** MinHash-LSH candidate pairs.
+  /** MinHash-LSH candidate pairs from pre-exploded (id, _el) element
+    * rows (wordShingleRows/charNgramRows, so sets are never
+    * materialized as arrays for the signature pass).
     *
     * Pipeline (all distributed, one shuffle per stage):
-    *   1. explode the set column → (id, element)
+    *   1. element rows (id, _el)
     *   2. one hash-aggregate computes all `numHashes` minhash values
     *      per id in a single pass (min over (a_i·h + b_i) mod p
     *      rehashes of one md5-segment hash per element)
@@ -281,20 +275,6 @@ object TextOps {
     * verifier confirms against the representative (other bands give
     * the rest their chances).
     */
-  def lshCandidates(
-      docs: DataFrame,
-      idCol: String,
-      setCol: String,
-      numHashes: Int,
-      rowsPerBand: Int,
-      maxBucketSize: Int = 100): DataFrame =
-    lshCandidatesFromRows(
-      docs.select(col(idCol), explode(col(setCol)).as("_el")),
-      idCol, numHashes, rowsPerBand, maxBucketSize)
-
-  /** Same, from pre-exploded (id, _el) element rows (pairs with
-    * wordShingleRows/charNgramRows so sets are never materialized as
-    * arrays for the signature pass). */
   def lshCandidatesFromRows(
       rows: DataFrame,
       idCol: String,

@@ -806,13 +806,12 @@ object TextQueries {
         // the default plan shuffled the 36.7M-row stream twice (the
         // lost map-side partial combined near-nothing on near-unique
         // keys anyway). AT-SCALE NOTE: a manual repartition PINS the
-        // partition count (spark.sql.shuffle.partitions) and opts
+        // partition count to spark.sql.shuffle.partitions and opts
         // that exchange out of AQE coalescing/skew-split — the right
         // trade at the measured 500k scale (it is what removes the
-        // second shuffle), but on a real cluster the count should
-        // track the window-stream size (~one partition per 128 MB of
-        // (h1,h2,doc_id) rows): set graft.ext.substrShufflePartitions
-        // to size it explicitly; unset, the session default applies. And n_win never touches the gram stream: the
+        // second shuffle); on a real cluster that conf should track
+        // the window-stream size (~one partition per 128 MB of
+        // (h1,h2,doc_id) rows). And n_win never touches the gram stream: the
         // stride-1 window count is CLOSED-FORM from the token count
         // (n_tok - k + 1 when n_tok >= k) — the previous
         // groupBy(doc_id) over 36.7M rows recomputed a subtraction.
@@ -824,13 +823,8 @@ object TextQueries {
         // doc_id < 2^43 enforced per-row on the level-1 output (the
         // smaller stream — distinct (h1,h2,doc) rows), before the
         // packing aggregate that would overflow on a wider id
-        val reparted = s.conf.getOption("graft.ext.substrShufflePartitions")
-          .map(_.toInt) match {
-          case Some(n) => grams.repartition(n, col("h1"), col("h2"))
-          case None => grams.repartition(col("h1"), col("h2"))
-        }
         val novel = TextOps.requirePackableDocIds(
-            reparted
+            grams.repartition(col("h1"), col("h2"))
               .groupBy(col("h1"), col("h2"), col("doc_id"))
               .agg(count(lit(1)).as("c")),
             "doc_id", "tx17")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.ext.TextOps
 
@@ -28,14 +29,12 @@ import graft.ext.TextOps
   * admits nothing — an unplanned source is a governance error, not
   * free capacity.
   *
-  * Scale + replay shape (DocsStream's conventions):
-  *   - Per-batch state lands under `stateDir/batch_id=N` as ONE row
-  *     per source (tokens seen + tokens admitted in that batch) — the
-  *     standing consumption view is a sum over those tiny rows,
-  *     broadcastable at any history length.
-  *   - Writes are overwrite-by-batchId, so at-least-once replay is
-  *     idempotent, and the standing view EXCLUDES the current batchId
-  *     so a replayed batch never double-counts its own prior attempt.
+  * Scale + replay shape:
+  *   - Storage and replay are [[StreamState]]'s protocol; a replayed
+  *     batch never double-counts its own prior attempt.
+  *   - Per-batch state is ONE row per source (tokens seen + tokens
+  *     admitted in that batch) — the standing consumption view is a
+  *     sum over those tiny rows, broadcastable at any history length.
   *   - The only window is the per-(source, batch) cumsum — partitioned
   *     by source and bounded by the batch, never corpus-sized.
   *
@@ -45,6 +44,9 @@ import graft.ext.TextOps
   */
 object BudgetStream {
 
+  private val stateSchema = StructType(Seq(
+    StructField("source", StringType), StructField("tokens_seen", LongType)))
+
   /** Tokens SEEN per source across every batch EXCEPT `excludeBatchId`
     * (replay safety); empty when no batch landed. Seen — not admitted —
     * is what makes the prefix cut durable: a rejected doc's tokens
@@ -53,14 +55,8 @@ object BudgetStream {
     * over id-ordered batches equals dp14's over the concatenation. */
   private[graft] def consumedState(spark: SparkSession, stateDir: String,
       excludeBatchId: Long): DataFrame =
-    StreamState.readDir(spark, stateDir)
-      .map(_.filter(col("batch_id") =!= excludeBatchId)
-        .groupBy(col("source"))
-        .agg(sum(col("tokens_seen")).as("consumed")))
-      .getOrElse {
-        import spark.implicits._
-        Seq.empty[(String, Long)].toDF("source", "consumed")
-      }
+    StreamState.standing(spark, stateDir, excludeBatchId, stateSchema)
+      .groupBy(col("source")).agg(sum(col("tokens_seen")).as("consumed"))
 
   /** One admission round. `budgets`: (source, budget_tokens);
     * `consumed`: (source, consumed) from prior batches; `batch`:
@@ -84,9 +80,9 @@ object BudgetStream {
 
   /** Start the enforcement stream. `docs` is a streaming
     * (doc_id, source, text) frame; `budgets` a static
-    * (source, budget_tokens) plan (dp12's output shape). Decisions
-    * land in `decisionsDir/batch_id=N`, per-source consumption in
-    * `stateDir/batch_id=N`, both overwrite-by-batchId. */
+    * (source, budget_tokens) plan (dp12's output shape). Per batch,
+    * decisions land in `decisionsDir` and per-source consumption in
+    * `stateDir` ([[StreamState.admissionStream]]). */
   def budgetAdmission(
       spark: SparkSession,
       docs: DataFrame,
@@ -94,26 +90,17 @@ object BudgetStream {
       stateDir: String,
       decisionsDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StreamState.admissionStream(docs, checkpointDir, stateDir, decisionsDir) {
+      (batch, batchId) =>
         val b = batch.select(col("doc_id"), col("source"), col("text"))
           .localCheckpoint(true)
-        val decisions = decide(budgets,
-          consumedState(spark, stateDir, excludeBatchId = batchId), b)
-          .localCheckpoint(true)
-        decisions.coalesce(1).write.mode("overwrite")
-          .parquet(s"$decisionsDir/batch_id=$batchId")
-        // state carries tokens SEEN (admitted or not — the durable
-        // prefix cut) alongside admitted (the reporting number)
-        decisions
-          .groupBy(col("source"))
-          .agg(sum(col("n_tok")).as("tokens_seen"),
-            sum(when(col("admitted") === 1, col("n_tok"))
-              .otherwise(lit(0L))).as("tokens_admitted"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$stateDir/batch_id=$batchId")
-        ()
-      }
-      .start()
+        (decide(budgets,
+            consumedState(spark, stateDir, excludeBatchId = batchId), b),
+          // state carries tokens SEEN (admitted or not — the durable
+          // prefix cut) alongside admitted (the reporting number)
+          _.groupBy(col("source"))
+            .agg(sum(col("n_tok")).as("tokens_seen"),
+              sum(when(col("admitted") === 1, col("n_tok"))
+                .otherwise(lit(0L))).as("tokens_admitted")))
+    }
 }

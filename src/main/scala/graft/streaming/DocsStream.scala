@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.ext.TextOps
+import graft.ext.{DedupIndex, SubstrIndex, TextOps}
+import graft.ext.DedupIndex.{Hashes, MaxBucket, RowsPerBand, ThreshDen, ThreshNum}
 
 /** Streaming near-dup ADMISSION over a document stream: each
   * micro-batch is MinHash-signed and LSH-probed against the standing
@@ -17,17 +18,13 @@ import graft.ext.TextOps
   * replay specs — the §2.9 twin convention).
   *
   * Scale/failure design:
-  *   - Admission is inherently sequential ACROSS batches (whether doc
-  *     N is a dup depends on what was admitted before it), so the
-  *     state lives in storage, not executor memory: a parquet dir
-  *     keyed by batch_id. At 100 TB it becomes a bucketed table whose
-  *     (band, bucket) index the probe join reads directly; the probe's
-  *     per-batch cost is signing ∝ batch size, and history-history
-  *     pairs never form (TextOps.lshProbePairs).
-  *   - Both sinks are overwrite-by-batchId — idempotent under the
-  *     at-least-once replay Structured Streaming guarantees — and the
-  *     standing view EXCLUDES the current batchId, so a replayed batch
-  *     never dedupes against its own previous attempt.
+  *   - Storage, replay and lifecycle follow [[StreamState]]'s
+  *     protocol: both admissions here (near-dup and suffix-dedup) are
+  *     `step`s of its one admission loop. At 100 TB the accepted state
+  *     promotes into a bucketed table whose (band, bucket) index the
+  *     probe join reads directly; the probe's per-batch cost is signing
+  *     ∝ batch size, and history-history pairs never form
+  *     (TextOps.lshProbePairs).
   *   - Within a batch, TWO selectable admission flavors.
   *     DEFAULT (conservative): a doc matching ANY smaller-id
   *     history-clean doc of the same batch is rejected
@@ -44,13 +41,6 @@ import graft.ext.TextOps
   */
 object DocsStream {
 
-  // dd03/dd17's constants, so a rejected doc is exactly a dd17 pair
-  private val Hashes = 36
-  private val RowsPerBand = 6
-  private val MaxBucket = 100
-  private val TNum = 8
-  private val TDen = 10
-
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
 
@@ -58,36 +48,22 @@ object DocsStream {
     * safety); empty frame when no batch has landed yet. */
   private[graft] def acceptedState(spark: SparkSession, stateDir: String,
       excludeBatchId: Long): DataFrame =
-    StreamState.readDir(spark, stateDir)
-      .map(_.filter(col("batch_id") =!= excludeBatchId)
-        .select(col("doc_id"), col("text")))
-      .getOrElse(
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], docSchema))
+    StreamState.standing(spark, stateDir, excludeBatchId, docSchema)
 
-  /** One admission round: probe `batch` against `standing`, then the
-    * history-clean residue against itself — conservative smaller-id-
-    * match rejection by default, greedy insert-then-probe when
-    * `intraSequential`. Returns (doc_id, status, dup_of, n_matches)
-    * for every batch doc. */
-  private[graft] def decide(standing: DataFrame, batch: DataFrame,
-      intraSequential: Boolean = false): DataFrame =
-    decideWith(
-      TextOps.lshProbePairs(
-        TextOps.wordShingleRows(standing, "doc_id", "text", 3),
-        TextOps.wordShingleRows(batch, "doc_id", "text", 3),
-        "doc_id", Hashes, RowsPerBand, MaxBucket, TNum, TDen),
-      batch, intraSequential)
-
-  /** [[decide]] with the history probe already run — the seam the
-    * table-backed admission path shares with the in-query one, so the
-    * intra-batch semantics (both flavors) literally cannot diverge
-    * between them. `histPairs`: (batch_id, hist_id, inter, uni). */
+  /** One admission round, given the history probe's `histPairs`
+    * (batch_id, hist_id, inter, uni): history matches reject, then the
+    * history-clean residue is probed against itself — conservative
+    * smaller-id-match rejection by default, greedy insert-then-probe
+    * when `intraSequential`. Returns (doc_id, status, dup_of,
+    * n_matches) for every batch doc. Both [[nearDupAdmission]]
+    * overloads run it, so the intra-batch semantics (both flavors)
+    * cannot diverge between the in-query and table-backed paths. */
   private[graft] def decideWith(histPairs: DataFrame, batch: DataFrame,
       intraSequential: Boolean): DataFrame = {
     val batchRows = TextOps.wordShingleRows(batch, "doc_id", "text", 3)
     rollDecisions(batch.select(col("doc_id")), histPairs,
       cleanIds => TextOps.lshNearDupPairs(batchRows.join(cleanIds, "doc_id"),
-        "doc_id", Hashes, RowsPerBand, MaxBucket, TNum, TDen),
+        "doc_id", Hashes, RowsPerBand, MaxBucket, ThreshNum, ThreshDen),
       intraSequential)
   }
 
@@ -149,8 +125,9 @@ object DocsStream {
   }
 
   /** Start the admission stream. `docs` is a streaming (doc_id, text)
-    * frame; decisions land in `decisionsDir/batch_id=N`, accepted docs
-    * in `stateDir/batch_id=N`, both overwrite-by-batchId. */
+    * frame; per batch, (doc_id, status, dup_of, n_matches) decisions
+    * land in `decisionsDir` and the admitted docs in `stateDir`
+    * ([[StreamState.admissionStream]]). */
   def nearDupAdmission(
       spark: SparkSession,
       docs: DataFrame,
@@ -159,23 +136,15 @@ object DocsStream {
       decisionsDir: String,
       checkpointDir: String,
       intraSequential: Boolean = false): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.select(col("doc_id"), col("text")).localCheckpoint(true)
-        val standing = initialCorpus.select(col("doc_id"), col("text"))
-          .union(acceptedState(spark, stateDir, excludeBatchId = batchId))
-        val decisions = decide(standing, b, intraSequential)
-          .localCheckpoint(true)
-        decisions.coalesce(1).write.mode("overwrite")
-          .parquet(s"$decisionsDir/batch_id=$batchId")
-        b.join(decisions.filter(col("status") === "new").select("doc_id"), "doc_id")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$stateDir/batch_id=$batchId")
-        ()
-      }
-      .outputMode(OutputMode.Append())
-      .start()
+    nearDupAdmissionWith(spark, docs, stateDir, decisionsDir, checkpointDir,
+        intraSequential) { (b, state) =>
+      TextOps.lshProbePairs(
+        TextOps.wordShingleRows(
+          initialCorpus.select(col("doc_id"), col("text")).union(state),
+          "doc_id", "text", 3),
+        TextOps.wordShingleRows(b, "doc_id", "text", 3),
+        "doc_id", Hashes, RowsPerBand, MaxBucket, ThreshNum, ThreshDen)
+    }
 
   /** [[nearDupAdmission]] bound to a persisted [[graft.ext.DedupIndex]]
     * TABLE plus a (doc_id, text) corpus table — the deployment path
@@ -202,34 +171,44 @@ object DocsStream {
       decisionsDir: String,
       checkpointDir: String,
       intraSequential: Boolean): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.ext.DedupIndex
+    nearDupAdmissionWith(spark, docs, stateDir, decisionsDir, checkpointDir,
+        intraSequential) { (b, standingState) =>
+      // read thrice (bucket rows, verify text, and not at all when
+      // empty) but DAYS-sized, not corpus-sized: promotion drains it
+      val state = standingState.localCheckpoint(true)
+      // the INDEX side of the standing union partition-prunes to the
+      // batch's own pb values; the days-sized state side joins in full
+      DedupIndex.probe(
+        spark, indexTable, b,
+        spark.table(corpusTable).select(col("doc_id"), col("text"))
+          .union(state),
+        extraBuckets = Some(DedupIndex.bucketRows(state)))
+    }
+
+  /** The near-dup admission step both overloads share: `histPairsFor`
+    * maps (batch, standing state) to the history probe's
+    * (batch_id, hist_id, inter, uni) pairs. */
+  private def nearDupAdmissionWith(
+      spark: SparkSession,
+      docs: DataFrame,
+      stateDir: String,
+      decisionsDir: String,
+      checkpointDir: String,
+      intraSequential: Boolean)(
+      histPairsFor: (DataFrame, DataFrame) => DataFrame): StreamingQuery =
+    StreamState.admissionStream(docs, checkpointDir, stateDir, decisionsDir) {
+      (batch, batchId) =>
         val b = batch.select(col("doc_id"), col("text")).localCheckpoint(true)
-        // read thrice (bucket rows, verify text, and not at all when
-        // empty) but DAYS-sized, not corpus-sized: promotion drains it
         val state = acceptedState(spark, stateDir, excludeBatchId = batchId)
-          .localCheckpoint(true)
-        // the INDEX side of the standing union partition-prunes to the
-        // batch's own pb values; the days-sized state side joins in full
-        val histPairs = DedupIndex.probe(
-          spark, indexTable, b,
-          spark.table(corpusTable).select(col("doc_id"), col("text"))
-            .union(state),
-          MaxBucket, TNum, TDen,
-          extraBuckets = Some(DedupIndex.bucketRows(state)))
-        val decisions = decideWith(histPairs, b, intraSequential)
-          .localCheckpoint(true)
-        decisions.coalesce(1).write.mode("overwrite")
-          .parquet(s"$decisionsDir/batch_id=$batchId")
-        b.join(decisions.filter(col("status") === "new").select("doc_id"), "doc_id")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$stateDir/batch_id=$batchId")
-        ()
-      }
-      .outputMode(OutputMode.Append())
-      .start()
+        (decideWith(histPairsFor(b, state), b, intraSequential),
+          admitted(b, "doc_id"))
+    }
+
+  /** The batch rows whose decision is `new` — the state an admission
+    * appends for later batches to dedupe against. */
+  private[streaming] def admitted(b: DataFrame, idCol: String)(
+      decisions: DataFrame): DataFrame =
+    b.join(decisions.filter(col("status") === "new").select(idCol), idCol)
 
   /** Promote the near-dup admission's accepted-doc state into its
     * persisted tables — [[promoteSubstrState]]'s twin for the
@@ -245,10 +224,8 @@ object DocsStream {
     * promotion retried re-appends nothing that already landed. */
   def promoteNearDupState(spark: SparkSession, stateDir: String,
       indexTable: String, corpusTable: String, uptoBatchId: Long): Unit =
-    StreamState.readDir(spark, stateDir).foreach { df =>
-      import graft.ext.DedupIndex
-      val docs = df.filter(col("batch_id") <= uptoBatchId)
-        .select(col("doc_id"), col("text")).localCheckpoint(true)
+    StreamState.promote(spark, stateDir, uptoBatchId) { promoted =>
+      val docs = promoted.select(col("doc_id"), col("text")).localCheckpoint(true)
       DedupIndex.append(
         docs.join(spark.table(indexTable).select(col("doc_id")).distinct(),
           Seq("doc_id"), "left_anti"),
@@ -256,7 +233,6 @@ object DocsStream {
       docs.join(spark.table(corpusTable).select(col("doc_id")),
           Seq("doc_id"), "left_anti")
         .write.mode("append").format("parquet").saveAsTable(corpusTable)
-      StreamState.dropUpto(spark, stateDir, uptoBatchId)
     }
 
   // ---------------------------------------------------------------
@@ -271,11 +247,7 @@ object DocsStream {
     * batch has landed yet. */
   private[graft] def keyState(spark: SparkSession, stateDir: String,
       excludeBatchId: Long): DataFrame =
-    StreamState.readDir(spark, stateDir)
-      .map(_.filter(col("batch_id") =!= excludeBatchId)
-        .select(col("h1"), col("h2")))
-      .getOrElse(
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], keySchema))
+    StreamState.standing(spark, stateDir, excludeBatchId, keySchema)
 
   /** One suffix-dedup admission round: dd25's standing-corpus probe
     * PLUS intra-batch first-carrier accounting (tx17's keep-first
@@ -316,7 +288,6 @@ object DocsStream {
     * frame, including the distinct fold, is batch-sized. */
   private[graft] def substrDecide(standingKeys: DataFrame,
       batch: DataFrame): DataFrame = {
-    import graft.ext.SubstrIndex
     val k = SubstrIndex.K
     val bk = SubstrIndex.windowKeys(batch) // per occurrence
     val knownKeys = standingKeys
@@ -391,18 +362,12 @@ object DocsStream {
     * and completes the delete. */
   def promoteSubstrState(spark: SparkSession, stateDir: String,
       table: String, uptoBatchId: Long): Unit =
-    StreamState.readDir(spark, stateDir).foreach { df =>
-      import graft.ext.SubstrIndex
-      SubstrIndex.appendKeys(
-        df.filter(col("batch_id") <= uptoBatchId)
-          .select(col("h1"), col("h2")), table)
-      StreamState.dropUpto(spark, stateDir, uptoBatchId)
+    StreamState.promote(spark, stateDir, uptoBatchId) { promoted =>
+      SubstrIndex.appendKeys(promoted.select(col("h1"), col("h2")), table)
     }
 
-  /** Start the suffix-dedup admission stream — [[nearDupAdmission]]'s
-    * storage/replay design (parquet state dir keyed by batch_id,
-    * overwrite-by-batchId sinks, standing view excludes the current
-    * batch) with dd25's probe as the decision rule: each micro-batch's
+  /** Start the suffix-dedup admission stream — [[StreamState]]'s
+    * protocol with dd25's probe as the decision rule: each micro-batch's
     * 8-token windows probe the standing key set (initial keys + every
     * batch accepted so far), kept docs' genuinely NEW keys append
     * (anti-join keeps the standing union a SET — a duplicate key would
@@ -430,7 +395,7 @@ object DocsStream {
       stateDir, decisionsDir, checkpointDir)
 
   /** [[substrAdmission]] bound directly to a persisted
-    * [[graft.ext.SubstrIndex]] TABLE — identical decisions
+    * [[SubstrIndex]] TABLE — identical decisions
     * (spec-pinned), but the per-batch standing scan is PARTITION-
     * PRUNED to the batch's own pb partitions (the probe's bounded
     * driver-list mechanics, per micro-batch): the trickle/interactive
@@ -445,7 +410,7 @@ object DocsStream {
       decisionsDir: String,
       checkpointDir: String): StreamingQuery =
     substrAdmissionWith(spark, docs,
-      bKeys => graft.ext.SubstrIndex.layout.prunedScan(spark, indexTable, bKeys),
+      bKeys => SubstrIndex.layout.prunedScan(spark, indexTable, bKeys),
       stateDir, decisionsDir, checkpointDir)
 
   /** Shared admission loop: `initialFor` maps the batch's distinct
@@ -458,10 +423,8 @@ object DocsStream {
       stateDir: String,
       decisionsDir: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.ext.SubstrIndex
+    StreamState.admissionStream(docs, checkpointDir, stateDir, decisionsDir) {
+      (batch, batchId) =>
         val b = batch.select(col("doc_id"), col("text")).localCheckpoint(true)
         // checkpointed: consumed by initialFor (pb collection on the
         // pruned path) AND as the narrowing's build side
@@ -477,17 +440,10 @@ object DocsStream {
               .union(keyState(spark, stateDir, excludeBatchId = batchId)),
             bKeys)
           .localCheckpoint(true)
-        val decisions = substrDecide(standing, b).localCheckpoint(true)
-        decisions.coalesce(1).write.mode("overwrite")
-          .parquet(s"$decisionsDir/batch_id=$batchId")
-        SubstrIndex.keySet(
-            b.join(decisions.filter(col("keep") === 1).select("doc_id"),
-              "doc_id"))
-          .join(standing, Seq("h1", "h2"), "left_anti")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$stateDir/batch_id=$batchId")
-        ()
-      }
-      .outputMode(OutputMode.Append())
-      .start()
+        (substrDecide(standing, b),
+          decisions => SubstrIndex.keySet(
+              b.join(decisions.filter(col("keep") === 1).select("doc_id"),
+                "doc_id"))
+            .join(standing, Seq("h1", "h2"), "left_anti"))
+    }
 }

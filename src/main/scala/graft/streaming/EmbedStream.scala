@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 
 import graft.ext.EmbedIndex
@@ -18,11 +18,9 @@ import graft.ext.EmbedIndex
   * so far); cosine-verified matches reject, survivors append to the
   * state so later batches dedupe against them.
   *
-  * [[DocsStream]]'s storage/replay design verbatim (parquet state dir
-  * keyed by batch_id, overwrite-by-batchId sinks, standing view
-  * excludes the current batch, [[StreamState.compact]] folds committed
-  * partitions) and [[DocsStream.rollDecisions]]'s status semantics
-  * verbatim — both intra-batch flavors included, because the roll is
+  * Storage, replay and lifecycle are [[StreamState]]'s protocol, and
+  * the status semantics are [[DocsStream.rollDecisions]]'s verbatim —
+  * both intra-batch flavors included, because the roll is
   * generic over the pair source and [[graft.ext.TextOps.sequentialAdmit]]
   * peels any (a_id, b_id) graph. The intra-batch pair source is
   * LITERALLY dd12's relation on the batch
@@ -41,22 +39,12 @@ object EmbedStream {
     * safety); empty frame when no batch has landed yet. */
   private[graft] def acceptedState(spark: SparkSession, stateDir: String,
       excludeBatchId: Long): DataFrame =
-    StreamState.readDir(spark, stateDir)
-      .map(_.filter(col("batch_id") =!= excludeBatchId)
-        .select(col("vec_id"), col("v")))
-      .getOrElse(
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], vecSchema))
+    StreamState.standing(spark, stateDir, excludeBatchId, vecSchema)
 
-  /** One admission round over NORMALIZED (vec_id, v) frames. Returns
+  /** One admission round over a NORMALIZED (vec_id, v) batch, given
+    * the history probe's `histPairs` (batch_id, hist_id, cos_e6) — the
+    * seam the table-backed path shares with the in-query one. Returns
     * (vec_id, status, dup_of, n_matches) for every batch vector. */
-  private[graft] def decide(standingVecs: DataFrame, batch: DataFrame,
-      intraSequential: Boolean = false): DataFrame =
-    decideWith(EmbedIndex.probeVecs(standingVecs, batch), batch,
-      intraSequential)
-
-  /** [[decide]] with the history probe already run — the seam the
-    * table-backed path shares with the in-query one. `histPairs`:
-    * (batch_id, hist_id, cos_e6). */
   private[graft] def decideWith(histPairs: DataFrame, batch: DataFrame,
       intraSequential: Boolean): DataFrame =
     DocsStream.rollDecisions(
@@ -116,27 +104,16 @@ object EmbedStream {
       decisionsDir: String,
       checkpointDir: String,
       intraSequential: Boolean): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    StreamState.admissionStream(vecs, checkpointDir, stateDir, decisionsDir) {
+      (batch, batchId) =>
         val b = EmbedIndex.normalized(batch).localCheckpoint(true)
         // read twice (probe standing side + sign for the state-side
         // rows) but DAYS-sized, not corpus-sized: promotion drains it
         val state = acceptedState(spark, stateDir, excludeBatchId = batchId)
           .localCheckpoint(true)
-        val decisions = decideWith(histPairsFor(b, state), b,
-            intraSequential)
-          .localCheckpoint(true)
-        decisions.coalesce(1).write.mode("overwrite")
-          .parquet(s"$decisionsDir/batch_id=$batchId")
-        b.join(decisions.filter(col("status") === "new").select("vec_id"),
-            "vec_id")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$stateDir/batch_id=$batchId")
-        ()
-      }
-      .outputMode(OutputMode.Append())
-      .start()
+        (decideWith(histPairsFor(b, state), b, intraSequential),
+          DocsStream.admitted(b, "vec_id"))
+    }
 
   /** Promote accepted state vectors into the persisted
     * [[graft.ext.EmbedIndex]] — [[DocsStream.promoteSubstrState]]'s
@@ -149,13 +126,11 @@ object EmbedStream {
     * the index, so there is no corpus-table half to keep consistent. */
   def promoteEmbedState(spark: SparkSession, stateDir: String,
       indexTable: String, uptoBatchId: Long): Unit =
-    StreamState.readDir(spark, stateDir).foreach { df =>
-      val vecs = df.filter(col("batch_id") <= uptoBatchId)
-        .select(col("vec_id"), col("v")).localCheckpoint(true)
+    StreamState.promote(spark, stateDir, uptoBatchId) { promoted =>
+      val vecs = promoted.select(col("vec_id"), col("v")).localCheckpoint(true)
       EmbedIndex.append(
         vecs.join(spark.table(indexTable).select(col("vec_id")).distinct(),
           Seq("vec_id"), "left_anti"),
         indexTable)
-      StreamState.dropUpto(spark, stateDir, uptoBatchId)
     }
 }

@@ -382,10 +382,12 @@ object EventsStream {
     * duplicates. This is the standard exactly-once-to-storage recipe
     * when the sink itself isn't transactional: (batchId, data) is
     * deterministic per checkpoint, so overwrite-by-batchId makes the
-    * write idempotent. Returns the running query; callers stop it.
+    * write idempotent ([[StreamState.writeBatch]], the layout every
+    * admission stream writes). Returns the running query; callers stop
+    * it.
     *
     * At scale the same shape targets object storage with dynamic
-    * partition overwrite; the per-batch `coalesce` here only bounds
+    * partition overwrite; the per-batch `coalesce(1)` only bounds
     * tiny-file count for the fixture-sized batches. */
   def runToIdempotentParquet(spark: SparkSession, df: DataFrame,
       outDir: String,
@@ -393,8 +395,7 @@ object EventsStream {
     df.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/batch_id=$batchId")
+        StreamState.writeBatch(batch, outDir, batchId)
       }
       .outputMode(OutputMode.Append())
       .start()

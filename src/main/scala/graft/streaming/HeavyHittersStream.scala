@@ -30,7 +30,7 @@ import org.apache.spark.sql.types._
   * admission/alerting where tx05's CMS-style sketch is only
   * probabilistic.
   *
-  * State/replay shape (BudgetStream's conventions): each batch writes
+  * State/replay shape ([[StreamState]]'s layout): each batch writes
   * its full summary (key, est) plus the shared scalars (err, n_seen)
   * under `stateDir/batch_id=N`, overwrite-by-batchId; a batch reads the
   * LATEST summary with batch_id < its own, so at-least-once replay is
@@ -151,8 +151,8 @@ object HeavyHittersStream {
         val merged = merge(
           readState(spark, stateDir, batchId),
           summarizeBatch(batch, keyCol, k), k)
-        writeState(spark, merged, s"$stateDir/batch_id=$batchId")
-        writeState(spark, merged, s"$outDir/batch_id=$batchId")
+        writeState(spark, merged, StreamState.batchDir(stateDir, batchId))
+        writeState(spark, merged, StreamState.batchDir(outDir, batchId))
         ()
       }
       .start()

@@ -149,39 +149,42 @@ class HarnessSpec extends SparkSpec {
     assert(GraftSession.planConfs.map(_.label) == Seq("preferSMJ", "runtimeBloom", "shjLocalMap"))
   }
 
-  test("GraftSession.scala holds the only SparkSession.builder( in src/main") {
+  /** "path: needle" for every `src/main/scala` source other than
+    * `owner` (a path under that root, which must exist) that contains
+    * one of `needles`. */
+  private def scanMain(owner: String, needles: Seq[String]): List[String] = {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
     val root = Paths.get("src/main/scala")
-    assert(Files.isRegularFile(root.resolve("graft/GraftSession.scala")),
-      s"scan root ${root.toAbsolutePath} does not hold GraftSession.scala")
+    assert(Files.isRegularFile(root.resolve(owner)),
+      s"scan root ${root.toAbsolutePath} does not hold ${Paths.get(owner).getFileName}")
     val walk = Files.walk(root)
-    val offenders = try walk.iterator.asScala.filter { (p: Path) =>
-      p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "GraftSession.scala" &&
-        Files.readString(p).contains("SparkSession.builder(")
-    }.toList finally walk.close()
-    assert(offenders.isEmpty,
-      s"build sessions through graft.GraftSession, not in: ${offenders.mkString(", ")}")
-  }
-
-  test("BucketedIndex.scala holds the only index-layout writes and catalog swaps in src/main") {
-    import java.nio.file.{Files, Path, Paths}
-    import scala.jdk.CollectionConverters._
-    val root = Paths.get("src/main/scala")
-    assert(Files.isRegularFile(root.resolve("graft/ext/BucketedIndex.scala")),
-      s"scan root ${root.toAbsolutePath} does not hold BucketedIndex.scala")
-    val needles = Seq("partitionBy(\"pb\")", "TBLPROPERTIES", "RENAME TO", "MSCK REPAIR")
-    val walk = Files.walk(root)
-    val offenders = try walk.iterator.asScala.flatMap { (p: Path) =>
-      if (!p.toString.endsWith(".scala") ||
-          p.getFileName.toString == "BucketedIndex.scala") Nil
+    try walk.iterator.asScala.flatMap { (p: Path) =>
+      if (!p.toString.endsWith(".scala") || p.endsWith(owner)) Nil
       else {
         val src = Files.readString(p)
         needles.filter(src.contains).map(n => s"$p: $n")
       }
     }.toList finally walk.close()
+  }
+
+  test("GraftSession.scala holds the only SparkSession.builder( in src/main") {
+    val offenders = scanMain("graft/GraftSession.scala", Seq("SparkSession.builder("))
+    assert(offenders.isEmpty,
+      s"build sessions through graft.GraftSession, not in: ${offenders.mkString(", ")}")
+  }
+
+  test("BucketedIndex.scala holds the only index-layout writes and catalog swaps in src/main") {
+    val needles = Seq("partitionBy(\"pb\")", "TBLPROPERTIES", "RENAME TO", "MSCK REPAIR")
+    val offenders = scanMain("graft/ext/BucketedIndex.scala", needles)
     assert(offenders.isEmpty,
       s"write index tables through graft.ext.BucketedIndex, not in: ${offenders.mkString(", ")}")
+  }
+
+  test("StreamState.scala holds the only batch_id= layout paths in src/main") {
+    val offenders = scanMain("graft/streaming/StreamState.scala",
+      Seq("/batch_id=$", "\"batch_id=\""))
+    assert(offenders.isEmpty,
+      s"write and name micro-batch partitions through graft.streaming.StreamState, not in: ${offenders.mkString(", ")}")
   }
 }
