@@ -9,6 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 
 import graft.CatalogQuery
+import graft.ext.DedupIndex.{Hashes, MaxBucket, RowsPerBand, ThreshDen, ThreshNum}
+import graft.functions.VectorOps.normalizedSqlCtes
 import graft.sources.Tables
 
 /** Deduplication operators over the `documents` / `embeddings` tables —
@@ -66,14 +68,7 @@ object DedupQueries {
     * recursive CTE materializes full reachability then takes the min
     * (fine at oracle scale; the Spark sides are the scale paths). */
   private val ccOracleSql: String =
-    """WITH RECURSIVE e AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |n AS (
-      |  SELECT vec_id,
-      |    CASE WHEN list_dot_product(v, v) = 0 THEN v
-      |         ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-      |    END AS nv
-      |  FROM e),
+    s"""WITH RECURSIVE ${normalizedSqlCtes()},
       |p AS (
       |  SELECT a.vec_id AS a_id, b.vec_id AS b_id
       |  FROM n a JOIN n b ON a.vec_id < b.vec_id
@@ -235,8 +230,8 @@ object DedupQueries {
         // would squat on executor memory for every later query.
         val rows = TextOps.wordShingleRows(docs(s, dir), "doc_id", "text", 3)
         TextOps.lshNearDupPairs(rows, "doc_id",
-            numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-            threshNum = 8, threshDen = 10)
+            numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+            threshNum = ThreshNum, threshDen = ThreshDen)
           .orderBy(col("a_id"), col("b_id"))
       },
       // Value oracle: minhash now derives from a 31-bit md5 segment with
@@ -245,8 +240,8 @@ object DedupQueries {
       // exact-Jaccard verification (TextOps.lshPairsOracleSql, generated
       // from the same parameters).
       Some(TextOps.lshPairsOracleSql(TextOps.wordShingleSql(3),
-        numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-        threshNum = 8, threshDen = 10))),
+        numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+        threshNum = ThreshNum, threshDen = ThreshDen))),
 
     CatalogQuery(
       "dd04_simhash",
@@ -283,7 +278,9 @@ object DedupQueries {
         // 5-char grams: 3-grams over a small shared vocabulary are
         // near-identical across ALL documents, which floods LSH buckets
         // with false candidates; 5-grams straddle word boundaries and
-        // discriminate
+        // discriminate. The constants are this char-gram scheme's own,
+        // not DedupIndex's (word 3-shingles): its bucket cap is 50, and
+        // the rest only happen to equal DedupIndex's today.
         // no persist() — same recompute-over-leak tradeoff as dd03
         val rows = TextOps.charNgramRows(docs(s, dir), "doc_id", "text", 5)
         TextOps.lshNearDupPairs(rows, "doc_id",
@@ -428,8 +425,8 @@ object DedupQueries {
         // canonical member to retain.
         val rows = TextOps.wordShingleRows(docs(s, dir), "doc_id", "text", 3)
         val pairs = TextOps.lshNearDupPairs(rows, "doc_id",
-            numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-            threshNum = 8, threshDen = 10)
+            numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+            threshNum = ThreshNum, threshDen = ThreshDen)
           .select(col("a_id"), col("b_id"))
         connectedComponents(pairs, "dd10")._1
           .select(col("v").as("doc_id"), col("lbl").cast("long").as("cluster"),
@@ -443,8 +440,8 @@ object DedupQueries {
       // on a planted-duplicate corpus every planted group must collapse
       // to one cluster with the min doc_id kept.
       Some(TextOps.lshClustersOracleSql(TextOps.wordShingleSql(3),
-        numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-        threshNum = 8, threshDen = 10))),
+        numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+        threshNum = ThreshNum, threshDen = ThreshDen))),
 
     CatalogQuery(
       "dd19_best_rep_dedup",
@@ -473,8 +470,8 @@ object DedupQueries {
         val d = docs(s, dir)
         val rows = TextOps.wordShingleRows(d, "doc_id", "text", 3)
         val pairs = TextOps.lshNearDupPairs(rows, "doc_id",
-            numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-            threshNum = 8, threshDen = 10)
+            numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+            threshNum = ThreshNum, threshDen = ThreshDen)
           .select(col("a_id"), col("b_id"))
         val cl = connectedComponents(pairs, "dd19")._1
           .select(col("v").as("doc_id"), col("lbl").cast("long").as("cluster"))
@@ -498,8 +495,8 @@ object DedupQueries {
           .orderBy(col("doc_id"))
       },
       Some(TextOps.lshBestRepOracleSql(TextOps.wordShingleSql(3),
-        numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-        threshNum = 8, threshDen = 10))),
+        numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+        threshNum = ThreshNum, threshDen = ThreshDen))),
 
     CatalogQuery(
       "dd20_span_removal",
@@ -664,8 +661,8 @@ object DedupQueries {
           size(TextOps.tokens(col("text"))).cast("long").as("n_tok"))
         val rows = TextOps.wordShingleRows(docs(s, dir), "doc_id", "text", 3)
         val pairs = TextOps.lshNearDupPairs(rows, "doc_id",
-            numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-            threshNum = 8, threshDen = 10)
+            numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+            threshNum = ThreshNum, threshDen = ThreshDen)
           .select(col("a_id"), col("b_id"))
         val cl = connectedComponents(pairs, "dd21")._1
           .select(col("v").as("doc_id"),
@@ -689,8 +686,8 @@ object DedupQueries {
       Some(s"""WITH cl AS (
              |  SELECT doc_id, keep FROM (
              |${TextOps.lshClustersOracleSql(TextOps.wordShingleSql(3),
-                 numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-                 threshNum = 8, threshDen = 10).linesIterator
+                 numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+                 threshNum = ThreshNum, threshDen = ThreshDen).linesIterator
                  .map("    " + _).mkString("\n")}
              |  ) t),
              |d AS (SELECT doc_id, source,
@@ -725,8 +722,8 @@ object DedupQueries {
         // threshold would undercount and are refused by omission).
         val rows = TextOps.wordShingleRows(docs(s, dir), "doc_id", "text", 3)
         val pairs = TextOps.lshNearDupPairs(rows, "doc_id",
-          numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-          threshNum = 8, threshDen = 10)
+          numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+          threshNum = ThreshNum, threshDen = ThreshDen)
         def atLeast(num: Int, den: Int) =
           sum(when(col("inter") * den >= col("uni") * num, 1L)
             .otherwise(0L))
@@ -741,8 +738,8 @@ object DedupQueries {
       Some(s"""WITH vp AS (
              |  SELECT inter, uni FROM (
              |${TextOps.lshPairsOracleSql(TextOps.wordShingleSql(3),
-                 numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-                 threshNum = 8, threshDen = 10).linesIterator
+                 numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+                 threshNum = ThreshNum, threshDen = ThreshDen).linesIterator
                  .map("    " + _).mkString("\n")}
              |  ) t)
              |SELECT CAST(th AS BIGINT) AS thresh_e6, CAST(n AS BIGINT)
@@ -1340,8 +1337,8 @@ object DedupQueries {
         val batchRows = TextOps.wordShingleRows(
           d.filter(isBatch), "doc_id", "text", 3)
         val roll = TextOps.lshProbePairs(histRows, batchRows, "doc_id",
-            numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-            threshNum = 8, threshDen = 10)
+            numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+            threshNum = ThreshNum, threshDen = ThreshDen)
           .groupBy(col("batch_id"))
           .agg(min(col("hist_id")).as("dup_of"),
             count(lit(1)).as("n_matches"))
@@ -1359,8 +1356,8 @@ object DedupQueries {
       // to batch -> capped history)
       Some(TextOps.lshProbeOracleSql(TextOps.wordShingleSql(3),
         batchPred = "doc_id % 5 = 4", histPred = "doc_id % 5 <> 4",
-        numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-        threshNum = 8, threshDen = 10))),
+        numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+        threshNum = ThreshNum, threshDen = ThreshDen))),
 
     CatalogQuery(
       "dd18_sequential_admission",
@@ -1379,8 +1376,8 @@ object DedupQueries {
         // correctness of admits.
         val rows = TextOps.wordShingleRows(docs(s, dir), "doc_id", "text", 3)
         val pairs = TextOps.lshNearDupPairs(rows, "doc_id",
-            numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-            threshNum = 8, threshDen = 10)
+            numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+            threshNum = ThreshNum, threshDen = ThreshDen)
           .select(col("a_id"), col("b_id"))
         TextOps.sequentialAdmit(pairs, rounds = 4)
           .orderBy(col("doc_id"))
@@ -1388,8 +1385,8 @@ object DedupQueries {
       // the same unrolled-round semantics in plain CTEs over dd10's
       // engine-portable pair chain
       Some(TextOps.sequentialAdmitOracleSql(TextOps.wordShingleSql(3),
-        numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-        threshNum = 8, threshDen = 10, rounds = 4))),
+        numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+        threshNum = ThreshNum, threshDen = ThreshDen, rounds = 4))),
 
     CatalogQuery(
       "dd26_embed_incremental",

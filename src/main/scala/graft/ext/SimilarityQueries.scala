@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.CatalogQuery
 import graft.functions.Aggregators.TopKByScore
+import graft.functions.VectorOps.normalizedSqlCtes
 import graft.sources.Tables
 
 /** Approximate-nearest-neighbor search over the embedding column.
@@ -106,14 +107,7 @@ object SimilarityQueries {
     val sigUnion = (0 until NTables).map(t =>
       s"SELECT vec_id, nv, $t AS t, ${sigSql(t)} AS sig FROM n")
       .mkString(" UNION ALL ")
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |n AS (
-       |  SELECT vec_id,
-       |    CASE WHEN list_dot_product(v, v) = 0 THEN v
-       |         ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-       |    END AS nv
-       |  FROM e),
+    s"""WITH ${normalizedSqlCtes()},
        |sigs AS ($sigUnion),
        |q AS (SELECT vec_id AS q_id, nv AS qv, t, sig FROM sigs WHERE vec_id < 10),
        |scored AS (
@@ -232,24 +226,23 @@ object SimilarityQueries {
         (col("pr") + 1).cast("long").as("rank"))
   }
 
+  /** Centroid `c` as a DuckDB list literal of the same dyadic
+    * rationals the Spark side builds. */
+  private def centLit(c: Int): String =
+    (0 until Dim).map(i => s"${centroidBits(c, i)}.0/65536.0 - 0.5")
+      .mkString("[", ", ", "]")
+
+  /** The IVF oracles' per-centroid assignment scores for `nv`
+    * (dot − |c|²/2), one list entry per centroid. */
+  private lazy val cdList: String = (0 until IvfCentroids).map { c =>
+    s"list_dot_product(nv, ${centLit(c)}) - " +
+      s"list_dot_product(${centLit(c)}, ${centLit(c)})/2"
+  }.mkString("[", ", ", "]")
+
   /** The corpus-assignment CTE prefix of ss03b's oracle (e/n/cd/a) —
     * shared by ss14's balance report. */
   private def ivfAssignSqlCtes: String = {
-    def centLit(c: Int): String =
-      (0 until Dim).map(i => s"${centroidBits(c, i)}.0/65536.0 - 0.5")
-        .mkString("[", ", ", "]")
-    val cdList = (0 until IvfCentroids).map { c =>
-      s"list_dot_product(nv, ${centLit(c)}) - " +
-        s"list_dot_product(${centLit(c)}, ${centLit(c)})/2"
-    }.mkString("[", ", ", "]")
-    s"""e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |n AS (
-       |  SELECT vec_id,
-       |    CASE WHEN list_dot_product(v, v) = 0 THEN v
-       |         ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-       |    END AS nv
-       |  FROM e),
+    s"""${normalizedSqlCtes()},
        |cd AS (SELECT vec_id, nv, $cdList AS cd FROM n),
        |a AS (SELECT vec_id,
        |    list_position(cd, list_max(cd)) - 1 AS bucket FROM cd)"""
@@ -261,13 +254,6 @@ object SimilarityQueries {
     * joined to the exact top-5 — the whole tuning curve in one
     * statement, integer-exact recall. */
   private[ext] def ivfSweepOracleSql(widths: Seq[Int]): String = {
-    def centLit(c: Int): String =
-      (0 until Dim).map(i => s"${centroidBits(c, i)}.0/65536.0 - 0.5")
-        .mkString("[", ", ", "]")
-    val cdList = (0 until IvfCentroids).map { c =>
-      s"list_dot_product(nv, ${centLit(c)}) - " +
-        s"list_dot_product(${centLit(c)}, ${centLit(c)})/2"
-    }.mkString("[", ", ", "]")
     val probeUnion = (0 until IvfCentroids).map(c =>
       s"SELECT vec_id AS q_id, nv AS qv, $c AS bucket, cd[${c + 1}] AS s " +
         "FROM cd WHERE vec_id < 10")
@@ -301,14 +287,7 @@ object SimilarityQueries {
          |  CAST((SELECT count(*) FROM scored_$p) AS BIGINT) AS n_scored"""
         .stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |n AS (
-       |  SELECT vec_id,
-       |    CASE WHEN list_dot_product(v, v) = 0 THEN v
-       |         ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-       |    END AS nv
-       |  FROM e),
+    s"""WITH ${normalizedSqlCtes()},
        |cd AS (SELECT vec_id, nv, $cdList AS cd FROM n),
        |a AS (SELECT vec_id, nv,
        |    list_position(cd, list_max(cd)) - 1 AS bucket FROM cd),
@@ -323,25 +302,11 @@ object SimilarityQueries {
     * dyadic rationals, assignment via list_position(cd, list_max(cd)),
     * probe ranking (score DESC, bucket ASC) mirroring TopKByScore. */
   private[ext] def ss03bOracleSql: String = {
-    def centLit(c: Int): String =
-      (0 until Dim).map(i => s"${centroidBits(c, i)}.0/65536.0 - 0.5")
-        .mkString("[", ", ", "]")
-    val cdList = (0 until IvfCentroids).map { c =>
-      s"list_dot_product(nv, ${centLit(c)}) - " +
-        s"list_dot_product(${centLit(c)}, ${centLit(c)})/2"
-    }.mkString("[", ", ", "]")
     val probeUnion = (0 until IvfCentroids).map(c =>
       s"SELECT vec_id AS q_id, nv AS qv, $c AS bucket, cd[${c + 1}] AS s " +
         "FROM cd WHERE vec_id < 10")
       .mkString(" UNION ALL ")
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |n AS (
-       |  SELECT vec_id,
-       |    CASE WHEN list_dot_product(v, v) = 0 THEN v
-       |         ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-       |    END AS nv
-       |  FROM e),
+    s"""WITH ${normalizedSqlCtes()},
        |cd AS (SELECT vec_id, nv, $cdList AS cd FROM n),
        |a AS (SELECT vec_id, nv,
        |    list_position(cd, list_max(cd)) - 1 AS bucket FROM cd),
@@ -433,7 +398,7 @@ object SimilarityQueries {
     * shortlist and the exact-cosine rerank both mirror TopKByScore's
     * (score DESC, id ASC) order. */
   private[ext] def ss09OracleSql: String = {
-    def centLit(j: Int, c: Int): String =
+    def pqCentLit(j: Int, c: Int): String =
       (0 until PqSub).map(i => s"${pqCentBits(j)(c)(i)}.0/65536.0")
         .mkString("[", ", ", "]")
     def subExpr(j: Int) = s"nv[${j * PqSub + 1}:${(j + 1) * PqSub}]"
@@ -441,15 +406,15 @@ object SimilarityQueries {
       .mkString(", ")
     val cdCols = (0 until PqM).map { j =>
       (0 until PqK).map(c =>
-        s"list_dot_product(sub$j, ${centLit(j, c)}) - " +
-          s"list_dot_product(${centLit(j, c)}, ${centLit(j, c)})/2")
+        s"list_dot_product(sub$j, ${pqCentLit(j, c)}) - " +
+          s"list_dot_product(${pqCentLit(j, c)}, ${pqCentLit(j, c)})/2")
         .mkString(s"[", ", ", s"] AS cd$j")
     }.mkString(", ")
     val codeCols = (0 until PqM).map(j =>
       s"list_position(cd$j, list_max(cd$j)) - 1 AS code$j").mkString(", ")
     val terms = (0 until PqM).map { j =>
       (0 until PqK).map(c =>
-        s"WHEN $c THEN list_dot_product(q.sub$j, ${centLit(j, c)})")
+        s"WHEN $c THEN list_dot_product(q.sub$j, ${pqCentLit(j, c)})")
         .mkString(s"CASE e.code$j ", " ", " END")
     }
     val score = terms.map(t => s"($t)").mkString(" + ")
@@ -512,23 +477,9 @@ object SimilarityQueries {
     * and the keep rule as a (cent_e6, vec_id) row_number mirroring the
     * Spark side's min-of-struct aggregation. */
   private[ext] def dd13OracleSql: String = {
-    def centLit(c: Int): String =
-      (0 until Dim).map(i => s"${centroidBits(c, i)}.0/65536.0 - 0.5")
-        .mkString("[", ", ", "]")
-    val cdList = (0 until IvfCentroids).map { c =>
-      s"list_dot_product(nv, ${centLit(c)}) - " +
-        s"list_dot_product(${centLit(c)}, ${centLit(c)})/2"
-    }.mkString("[", ", ", "]")
     val centUnion = (0 until IvfCentroids).map(c =>
       s"SELECT $c AS bucket, ${centLit(c)} AS c").mkString(" UNION ALL ")
-    s"""WITH RECURSIVE e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |n AS (
-       |  SELECT vec_id,
-       |    CASE WHEN list_dot_product(v, v) = 0 THEN v
-       |         ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-       |    END AS nv
-       |  FROM e),
+    s"""WITH RECURSIVE ${normalizedSqlCtes()},
        |cd AS (SELECT vec_id, nv, $cdList AS cd FROM n),
        |a AS (SELECT vec_id, nv,
        |    list_position(cd, list_max(cd)) - 1 AS bucket FROM cd),
@@ -564,25 +515,11 @@ object SimilarityQueries {
     * ss05's int8 quantization; scoring is the dequantized int8 dot over
     * probed buckets only. */
   private[ext] def ss08OracleSql: String = {
-    def centLit(c: Int): String =
-      (0 until Dim).map(i => s"${centroidBits(c, i)}.0/65536.0 - 0.5")
-        .mkString("[", ", ", "]")
-    val cdList = (0 until IvfCentroids).map { c =>
-      s"list_dot_product(nv, ${centLit(c)}) - " +
-        s"list_dot_product(${centLit(c)}, ${centLit(c)})/2"
-    }.mkString("[", ", ", "]")
     val probeUnion = (0 until IvfCentroids).map(c =>
       s"SELECT vec_id AS q_id, $c AS bucket, cd[${c + 1}] AS s " +
         "FROM cd WHERE vec_id < 10")
       .mkString(" UNION ALL ")
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |n AS (
-       |  SELECT vec_id,
-       |    CASE WHEN list_dot_product(v, v) = 0 THEN v
-       |         ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-       |    END AS nv
-       |  FROM e),
+    s"""WITH ${normalizedSqlCtes()},
        |cd AS (SELECT vec_id, nv, $cdList AS cd FROM n),
        |sc AS (
        |  SELECT vec_id, nv, cd,
@@ -774,14 +711,7 @@ object SimilarityQueries {
     val sigUnion = (0 until NdTables).map(t =>
       s"SELECT vec_id, $t AS t, ${sigSql(t)} AS sig FROM n")
       .mkString(" UNION ALL ")
-    s"""WITH e AS (
-       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |n AS (
-       |  SELECT vec_id,
-       |    CASE WHEN list_dot_product(v, v) = 0 THEN v
-       |         ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-       |    END AS nv
-       |  FROM e),
+    s"""WITH ${normalizedSqlCtes()},
        |sigs AS ($sigUnion)""".stripMargin
   }
 
@@ -905,14 +835,7 @@ object SimilarityQueries {
   // row_number tiebreak (cos DESC, id ASC) mirrors TopKByScore's
   // `beats` ordering exactly
   private[ext] val ss01OracleSql: String =
-    """WITH e AS (
-      |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |n AS (
-      |  SELECT vec_id,
-      |    CASE WHEN list_dot_product(v, v) = 0 THEN v
-      |         ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-      |    END AS nv
-      |  FROM e),
+    s"""WITH ${normalizedSqlCtes()},
       |scored AS (
       |  SELECT q.vec_id AS q_id, c.vec_id AS neighbor_id,
       |    list_dot_product(q.nv, c.nv) AS cos
@@ -1058,14 +981,7 @@ object SimilarityQueries {
       },
       // exact: same IEEE-identical cosine argument as ss01; queries are
       // NOT themselves filtered (a non-en query still searches en docs)
-      Some("""WITH e AS (
-             |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-             |n AS (
-             |  SELECT vec_id,
-             |    CASE WHEN list_dot_product(v, v) = 0 THEN v
-             |         ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-             |    END AS nv
-             |  FROM e),
+      Some(s"""WITH ${normalizedSqlCtes()},
              |f AS (
              |  SELECT n.vec_id, n.nv FROM n
              |  JOIN documents d ON d.doc_id = n.vec_id AND d.lang = 'en'),
@@ -1115,14 +1031,7 @@ object SimilarityQueries {
                 col("sa") * col("scale")).as("cos")))
       },
       // same normalize/dot/rank mirror as ss01, over the quantized codes
-      Some("""WITH e AS (
-             |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-             |n AS (
-             |  SELECT vec_id,
-             |    CASE WHEN list_dot_product(v, v) = 0 THEN v
-             |         ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-             |    END AS nv
-             |  FROM e),
+      Some(s"""WITH ${normalizedSqlCtes()},
              |sc AS (
              |  SELECT vec_id, nv,
              |    list_max(list_transform(nv, x -> abs(x))) / 127.0 AS scale
@@ -1238,14 +1147,7 @@ object SimilarityQueries {
              |  SELECT doc_id, CAST(round(score * 1e6) AS BIGINT) AS bm25_e6
              |  FROM scored WHERE score > 0
              |  ORDER BY bm25_e6 DESC, doc_id LIMIT 50),
-             |e AS (
-             |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-             |n2 AS (
-             |  SELECT vec_id,
-             |    CASE WHEN list_dot_product(v, v) = 0 THEN v
-             |         ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-             |    END AS nv
-             |  FROM e),
+             |${normalizedSqlCtes("n2")},
              |qv AS (SELECT nv FROM n2 WHERE vec_id = 0),
              |rr AS (
              |  SELECT c.doc_id, c.bm25_e6,
@@ -1397,14 +1299,7 @@ object SimilarityQueries {
         val out = (1 to 5)
           .map(r => s"SELECT $r AS rank, vec_id, rel_e6, mmr_e6 FROM s$r")
           .mkString(" UNION ALL ")
-        s"""WITH e AS (
-           |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |n AS (
-           |  SELECT vec_id,
-           |    CASE WHEN list_dot_product(v, v) = 0 THEN v
-           |         ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
-           |    END AS nv
-           |  FROM e),
+        s"""WITH ${normalizedSqlCtes()},
            |q AS (SELECT nv FROM n WHERE vec_id = 0),
            |rel0 AS (SELECT c.vec_id,
            |    CAST(round(list_dot_product(q.nv, c.nv) * 1e6) AS BIGINT) AS rel_e6

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.CatalogQuery
+import graft.ext.DedupIndex.{Hashes, MaxBucket, RowsPerBand, ThreshDen, ThreshNum}
 import graft.sources.Tables
 
 /** Text-analysis operators for the training-data pipeline: language ID,
@@ -1206,14 +1207,14 @@ object TextQueries {
         val d = docs(s, dir)
         val rows = TextOps.wordShingleRows(d, "doc_id", "text", 3)
         val pairs = TextOps.lshNearDupPairs(rows, "doc_id",
-          numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-          threshNum = 8, threshDen = 10)
+          numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+          threshNum = ThreshNum, threshDen = ThreshDen)
         TextOps.nearDupSourceMatrix(pairs, d.select(col("doc_id"), col("source")))
           .orderBy(col("source_a"), col("source_b"))
       },
       Some(TextOps.lshSourceMatrixOracleSql(TextOps.wordShingleSql(3),
-        numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-        threshNum = 8, threshDen = 10))),
+        numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+        threshNum = ThreshNum, threshDen = ThreshDen))),
 
     CatalogQuery(
       "tx24_split_drift_psi",

@@ -678,6 +678,21 @@ object VectorOps {
       .otherwise(call_function("array_div", v, n))
   }
 
+  /** [[normalize]]'s DuckDB twin for the value oracles: the CTE pair
+    * `e(vec_id, v)` over `embeddings` and `n(vec_id, nv)` with the same
+    * zero-vector guard and the same x / sqrt(dot(v, v)) division, so
+    * the oracle's normalized vectors are IEEE-identical to the Spark
+    * side's. `n` names the second CTE. */
+  def normalizedSqlCtes(n: String = "n"): String =
+    s"""e AS (
+       |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |$n AS (
+       |  SELECT vec_id,
+       |    CASE WHEN list_dot_product(v, v) = 0 THEN v
+       |         ELSE list_transform(v, x -> x / sqrt(list_dot_product(v, v)))
+       |    END AS nv
+       |  FROM e)""".stripMargin
+
   /** Cosine via pre-normalization: cosine(a, b) = dot(norm(a), norm(b)).
     * When the same vectors appear in many pairs (similarity joins),
     * normalize once per vector and use `dot` on the pairs instead. */

@@ -17,16 +17,20 @@ import org.apache.spark.sql.functions._
   * lives in exactly ONE cell — the coordinates are functions of the
   * attribute values — so no dedup is ever needed.
   *
-  * Spark realization: instead of a custom ShuffleExchange, the cell
-  * coordinates become ordinary columns and every pairwise join key is
-  * EXTENDED with all m coordinate columns. Catalyst keeps planning
-  * (AQE, SMJ/SHJ choice, codegen); the coordinates do the hypercube's
-  * real work — SKEW BOUNDING: a heavy value of attr `a` no longer
-  * meets its counterparts in one reducer, because the other
-  * attributes' coordinates split that key's work across
-  * Π_{b≠a} p_b cells. That is what the binary-join plan cannot do
-  * without explicit salting, and why the reference runs cyclic
-  * (triangle/square) queries through this executor.
+  * Spark realization: one planned operator. Each relation is cubed
+  * ([[cubed]]) and tagged with its linearized cell id; the fragments
+  * are homogenized into one union and wrapped in
+  * [[graft.plans.HypercubeJoinNode]], whose physical operator declares
+  * the cell as its required distribution. EnsureRequirements inserts
+  * the ONE replicated-input shuffle (readable in EXPLAIN as the single
+  * `Exchange hashpartitioning(_hc_cell …)`), and each cell's fragments
+  * are hash-folded locally — no intermediate result ever shuffles. The
+  * coordinates also do the hypercube's other job, SKEW BOUNDING: a
+  * heavy value of attr `a` no longer meets its counterparts in one
+  * reducer, because the other attributes' coordinates split that key's
+  * work across Π_{b≠a} p_b cells. That is what the binary-join plan
+  * cannot do without explicit salting, and why the reference runs
+  * cyclic (triangle/square) queries through this executor.
   *
   * Costs are the textbook ones: R_j is replicated Π_{a∉S_j} p_a
   * times. [[shares]] picks the integer share vector minimizing total
@@ -74,7 +78,7 @@ object HypercubeJoin {
     candidates.minBy(p => (cost(p), attrs.map(p(_)).mkString(",")))
   }
 
-  /** Every executor hashes attr values into cell coordinates
+  /** The executor hashes attr values into cell coordinates
     * (`xxhash64`), and xxhash64(1: INT) != xxhash64(1L: BIGINT) — a
     * shared attribute carried with DIFFERENT types would silently land
     * matching tuples in different cells (and the fold's boxed equality
@@ -89,9 +93,8 @@ object HypercubeJoin {
         bad.map { case (a, ts) => s"$a -> ${ts.mkString("/")}" }.mkString(", "))
   }
 
-  /** Every flavor's per-cell fold compares attribute values by OBJECT
-    * equality (boxed `!=` in [[joinLocal]], `HashMap` keys, the
-    * codegen'd comparator in the planned operator) — types whose
+  /** The per-cell fold compares attribute values by OBJECT equality
+    * (`HashMap` keys over extracted values) — types whose
     * runtime representation breaks value-equality would DROP co-located
     * matches silently (`Array[Byte]` compares by reference), the worst
     * failure mode there is. Fail loudly for all of them: struct/array/
@@ -126,26 +129,6 @@ object HypercubeJoin {
           explode(sequence(lit(0), lit(shares(a) - 1))))
     }
 
-  /** The one-round multi-way join. Join keys of every pairwise fold =
-    * shared natural attributes + ALL coordinate columns; the final
-    * projection drops the coordinates. */
-  def join(rels: Seq[Rel], shares: Map[String, Int]): DataFrame = {
-    require(rels.nonEmpty, "no relations")
-    val attrs = rels.flatMap(_.attrs).distinct
-    require(attrs.forall(shares.contains),
-      s"missing shares for ${attrs.filterNot(shares.contains)}")
-    requireConsistentAttrTypes(rels)
-    requireAtomicAttrTypes(rels)
-    shares.foreach { case (a, p) =>
-      require(p >= 1, s"share for $a must be >= 1, got $p") }
-    val coords = attrs.map(coordCol)
-    val (joined, _) = rels.map(r => (cubed(r, attrs, shares), r.attrs.toSet))
-      .reduceLeft[(DataFrame, Set[String])] { case ((ld, las), (rd, ras)) =>
-        ((ld.join(rd, (las & ras).toSeq ++ coords), las | ras))
-      }
-    joined.drop(coords: _*)
-  }
-
   /** Relative size estimates from Catalyst's optimized-plan statistics
     * — parquet footer totals, DSv2 `SupportsReportStatistics` (which
     * [[graft.sources.GenSource]] reports), CBO column stats — so the
@@ -176,201 +159,23 @@ object HypercubeJoin {
     }
   }
 
-  /** The share vector [[joinAuto]] uses: statistics-based when Catalyst
-    * has estimates (no job runs — the 100 TB path), `count()` jobs only
-    * as the last-resort fallback. Exposed so callers can inspect or
-    * cache the solve. */
+  /** A share vector for [[join]] from statistics when Catalyst has
+    * estimates (no job runs — the 100 TB path), `count()` jobs only as
+    * the last-resort fallback. Exposed so callers can inspect or cache
+    * the solve; pass better estimates to [[shares]] directly if you
+    * have them. */
   def autoShares(rels: Seq[Rel], totalP: Int): Map[String, Int] = {
     val est = statsEstimates(rels)
       .getOrElse(rels.map(_.df.count().toDouble))
     shares(rels.map(_.attrs).zip(est), totalP)
   }
 
-  /** Convenience: [[join]] with [[autoShares]] — plan statistics feed
-    * the solver, so no count job runs against a parquet or DSv2 input.
-    * At scale, pass pre-computed estimates to [[shares]] directly if
-    * you have better ones (`shares` + `join` are separable precisely
-    * for that). */
-  def joinAuto(rels: Seq[Rel], totalP: Int): DataFrame =
-    join(rels, autoShares(rels, totalP))
-
-  /** The GENUINE one-round hypercube: replicated inputs shuffle ONCE to
-    * their cells, and the multi-way join runs LOCALLY per cell — no
-    * intermediate result ever shuffles. [[join]] keeps Catalyst
-    * planning but pays a shuffle per fold of the (possibly enormous)
-    * intermediate; this pays only the replicated-input shuffle
-    * (Σ_j |R_j| · Π_{a∉S_j} p_a rows), which is the quantity the
-    * Shares solver minimizes — on a hub-skewed triangle the
-    * intermediate is O(K²) while the replicated input is O(K·p).
-    *
-    * Mechanics: every tuple keys by its linearized cell id, one
-    * groupByKey co-locates each cell's fragments (cell load is exactly
-    * what the Shares LP bounds — that is the theory's guarantee that
-    * this fits an executor), and an in-memory hash fold joins the
-    * fragments. Imperative per-partition code is justified here: the
-    * fold's NO-SHUFFLE property is the operator's point and cannot be
-    * declared in DataFrame algebra (Catalyst re-plans each fold join
-    * with its own exchange).
-    *
-    * Output columns: each attribute once, then every relation's
-    * payload columns in relation order (natural-join semantics; null
-    * attr values never match, as in [[join]]). */
-  def joinLocal(rels: Seq[Rel], shares: Map[String, Int]): DataFrame = {
-    require(rels.nonEmpty, "no relations")
-    val attrs = rels.flatMap(_.attrs).distinct
-    require(attrs.forall(shares.contains),
-      s"missing shares for ${attrs.filterNot(shares.contains)}")
-    requireConsistentAttrTypes(rels)
-    requireAtomicAttrTypes(rels)
-    val spark = rels.head.df.sparkSession
-    val coords = attrs.map(coordCol)
-    // linearized cell id on top of the cubed frames
-    val cell: Column = attrs.map(a => col(coordCol(a)))
-      .zip(attrs.map(a => shares(a)))
-      .foldLeft(lit(0)) { case (acc, (c, p)) => acc * p + c }
-    val relSchemas = rels.map(_.df.schema)
-    // (cell, (relIdx, row)) — row as Seq[Any] in the rel's own order
-    val tagged = rels.zipWithIndex.map { case (r, i) =>
-      cubed(r, attrs, shares).withColumn("_hc_cell", cell)
-        .drop(coords: _*)
-        .rdd.map { row =>
-          (row.getAs[Int]("_hc_cell"),
-            (i, Range(0, row.length - 1).map(row.get)))
-        }
-    }.reduce(_ union _)
-    val nRels = rels.size
-    val relAttrs = rels.map(_.attrs)
-    val relCols = relSchemas.map(_.fieldNames.toSeq)
-    // output: attrs (in first-appearance order) then per-rel payloads
-    val payloadCols = rels.zipWithIndex.flatMap { case (r, i) =>
-      relCols(i).filterNot(attrs.contains).map(c => (i, c))
-    }
-    val outSchema = org.apache.spark.sql.types.StructType(
-      attrs.map { a =>
-        val (ri, fi) = firstFieldOf(a, relCols)
-        relSchemas(ri).fields(fi).copy(name = a)
-      } ++ payloadCols.map { case (ri, c) =>
-        relSchemas(ri).fields(relCols(ri).indexOf(c))
-      })
-    val nCells = attrs.map(shares(_)).product
-    // precomputed index plumbing (serialized into the closure):
-    // attrPos(j)(k)  = position in attrs of rel j's k-th attr column
-    // attrSrc(j)(k)  = position in rel j's row of that attr
-    // paySrc(j)(k)   = position in rel j's row of its k-th payload col
-    // payDst(j)(k)   = position in the global payload layout
-    // boundAttrs(j)  = attr positions already bound before rel j folds
-    //                  that rel j also has (= the join key)
-    val attrIdx = attrs.zipWithIndex.toMap
-    val attrPos = relAttrs.map(_.map(attrIdx).toArray).toArray
-    val attrSrc = relAttrs.zipWithIndex
-      .map { case (as, j) => as.map(relCols(j).indexOf).toArray }.toArray
-    val payOfRel = relCols.zipWithIndex
-      .map { case (cs, j) => cs.filterNot(attrs.contains) }
-    val paySrc = payOfRel.zipWithIndex
-      .map { case (ps, j) => ps.map(relCols(j).indexOf).toArray }.toArray
-    val payOffsets = payOfRel.map(_.size).scanLeft(0)(_ + _).toArray
-    val nPay = payOffsets.last
-    val nAttrs = attrs.size
-    val keyPos: Array[Array[Int]] = {
-      val seen = scala.collection.mutable.Set.empty[Int]
-      relAttrs.indices.map { j =>
-        val key = attrPos(j).filter(seen.contains)
-        attrPos(j).foreach(seen.add)
-        key
-      }.toArray
-    }
-    val joinedRdd = tagged.groupByKey(math.min(nCells,
-      spark.sparkContext.defaultParallelism * 4)).flatMap { case (_, it) =>
-      // fragments per relation, in this cell
-      val frags = Array.fill(nRels)(
-        scala.collection.mutable.ArrayBuffer.empty[IndexedSeq[Any]])
-      it.foreach { case (i, row) => frags(i) += row }
-      // accumulated tuple = bound attr values (attrs layout, null =
-      // unbound) + payload values (global layout); arrays, not maps —
-      // the fold allocates two array copies per intermediate tuple
-      def start(): Iterator[(Array[Any], Array[Any])] =
-        frags(0).iterator.flatMap { r =>
-          if (attrSrc(0).exists(p => r(p) == null)) None
-          else {
-            val b = new Array[Any](nAttrs); val pay = new Array[Any](nPay)
-            var k = 0
-            while (k < attrPos(0).length) { b(attrPos(0)(k)) = r(attrSrc(0)(k)); k += 1 }
-            k = 0
-            while (k < paySrc(0).length) { pay(payOffsets(0) + k) = r(paySrc(0)(k)); k += 1 }
-            Some((b, pay))
-          }
-        }
-      var acc: Iterator[(Array[Any], Array[Any])] = start()
-      var j = 1
-      while (j < nRels) {
-        val jj = j
-        // index fragment jj by its key attrs' values
-        val idx = new scala.collection.mutable.HashMap[
-          List[Any], scala.collection.mutable.ArrayBuffer[IndexedSeq[Any]]]()
-        frags(jj).foreach { r =>
-          if (!attrSrc(jj).exists(p => r(p) == null)) {
-            val key = keyPos(jj).map(a =>
-              r(attrSrc(jj)(attrPos(jj).indexOf(a)))).toList
-            idx.getOrElseUpdate(key,
-              scala.collection.mutable.ArrayBuffer.empty) += r
-          }
-        }
-        val prev = acc
-        acc = prev.flatMap { case (b, pay) =>
-          val key = keyPos(jj).map(b(_)).toList
-          idx.get(key) match {
-            case None => Iterator.empty
-            case Some(rs) => rs.iterator.flatMap { r =>
-              // non-key attrs of rel jj must be UNBOUND so far (true by
-              // keyPos construction) — extend the binding
-              val b2 = b.clone(); val pay2 = pay.clone()
-              var k = 0
-              var ok = true
-              while (k < attrPos(jj).length) {
-                val a = attrPos(jj)(k); val v = r(attrSrc(jj)(k))
-                if (b2(a) == null) b2(a) = v
-                else if (b2(a) != v) ok = false
-                k += 1
-              }
-              if (!ok) Iterator.empty
-              else {
-                k = 0
-                while (k < paySrc(jj).length) {
-                  pay2(payOffsets(jj) + k) = r(paySrc(jj)(k)); k += 1
-                }
-                Iterator.single((b2, pay2))
-              }
-            }
-          }
-        }
-        j += 1
-      }
-      acc.map { case (b, pay) =>
-        org.apache.spark.sql.Row.fromSeq(b.toSeq ++ pay.toSeq)
-      }
-    }
-    spark.createDataFrame(joinedRdd, outSchema)
-  }
-
-  /** (relIdx, fieldIdx) of the first relation carrying attribute `a`. */
-  private def firstFieldOf(a: String,
-      relCols: Seq[Seq[String]]): (Int, Int) = {
-    val ri = relCols.indexWhere(_.contains(a))
-    (ri, relCols(ri).indexOf(a))
-  }
-
-  /** [[joinLocal]]'s semantics as a PLANNED operator: builds the
-    * homogenized fragment union in DataFrame space, wraps it in
-    * [[graft.plans.HypercubeJoinNode]], and lets Catalyst do the rest —
-    * EnsureRequirements inserts the ONE replicated-input shuffle the
-    * physical operator declares, so the one-round property is visible
-    * in EXPLAIN as the plan's single Exchange. Requires
-    * [[graft.plans.HypercubeStrategy]] to be registered
-    * (`spark.sql.extensions=graft.plans.GraftExtensions`, or
-    * `spark.experimental.extraStrategies`). Output columns: each
-    * attribute once, then every relation's payload columns in relation
-    * order — same shape as [[joinLocal]]. */
-  def joinPlanned(rels: Seq[Rel], shares: Map[String, Int]): DataFrame = {
+  /** The one-round multi-way join. Registers
+    * [[graft.plans.HypercubeStrategy]] on sessions built without
+    * `graft.plans.GraftExtensions` (idempotent). Output columns: each
+    * attribute once, in first-appearance order, then every relation's
+    * payload columns in relation order. */
+  def join(rels: Seq[Rel], shares: Map[String, Int]): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     require(rels.nonEmpty, "no relations")
     val attrs = rels.flatMap(_.attrs).distinct
@@ -378,7 +183,10 @@ object HypercubeJoin {
       s"missing shares for ${attrs.filterNot(shares.contains)}")
     requireConsistentAttrTypes(rels)
     requireAtomicAttrTypes(rels)
+    shares.foreach { case (a, p) =>
+      require(p >= 1, s"share for $a must be >= 1, got $p") }
     val spark = rels.head.df.sparkSession
+    graft.plans.HypercubeStrategy.ensureRegistered(spark)
     val cell: Column = attrs.map(a => col(coordCol(a)))
       .zip(attrs.map(shares)).foldLeft(lit(0)) { case (acc, (c, p)) => acc * p + c }
     val relCols = rels.map(_.df.schema.fieldNames.toSeq)
@@ -386,8 +194,8 @@ object HypercubeJoin {
       val ri = relCols.indexWhere(_.contains(a))
       a -> rels(ri).df.schema(a).dataType
     }.toMap
-    val payloadCols = rels.zipWithIndex.flatMap { case (_, i) =>
-      relCols(i).filterNot(attrs.contains).map(c => (i, c))
+    val payloadCols = relCols.zipWithIndex.flatMap { case (cs, i) =>
+      cs.filterNot(attrs.contains).map(c => (i, c))
     }
     val unified = rels.zipWithIndex.map { case (r, i) =>
       val nonNull = r.attrs.map(col(_).isNotNull).reduce(_ && _)

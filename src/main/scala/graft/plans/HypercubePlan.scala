@@ -12,16 +12,15 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 /** The one-round hypercube join as a FIRST-CLASS plan node: logical
   * node + strategy + physical operator, registered through
   * `SparkSessionExtensions` ([[GraftExtensions]]) or runtime
-  * `experimental.extraStrategies`. Where `HypercubeJoin.joinLocal`
-  * drops to an RDD `groupByKey` (invisible to EXPLAIN, Java-serialized
-  * pairs), this keeps the whole query inside Catalyst:
-  * EnsureRequirements plans the ONE replicated-input shuffle from
-  * `requiredChildDistribution` — the operator's defining property is
-  * readable in the plan as its single Exchange — inputs stay
-  * InternalRows end to end, and AQE still owns partition coalescing
-  * above the exchange.
+  * `experimental.extraStrategies` (`HypercubeJoin.join` calls
+  * [[HypercubeStrategy.ensureRegistered]]). The whole query stays
+  * inside Catalyst: EnsureRequirements plans the ONE replicated-input
+  * shuffle from `requiredChildDistribution` — the operator's defining
+  * property is readable in the plan as its single Exchange — inputs
+  * stay InternalRows end to end, and AQE still owns partition
+  * coalescing above the exchange.
   *
-  * Contract (enforced by the builder, `HypercubeJoin.joinPlanned`):
+  * Contract (enforced by the builder, `HypercubeJoin.join`):
   * the child is a UNION of per-relation fragments homogenized to
   *   (_hc_cell INT, _hc_rel INT, attr_0 .. attr_{K-1}, pay_0 .. pay_{P-1})
   * where a fragment row carries non-null values exactly in ITS
@@ -64,8 +63,8 @@ object HypercubeStrategy extends SparkStrategy {
     * contains-then-append from inside concurrently executing queries
     * can double-register (and a strategy firing twice plans the node
     * twice). Sessions that own their builder should prefer the
-    * extensions config; this exists so a catalog query can run on ANY
-    * session. */
+    * extensions config; this exists so `HypercubeJoin.join` can run on
+    * ANY session. */
   def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
     synchronized {
       val present =
@@ -96,7 +95,7 @@ case class HypercubeJoinExec(
     * cells (their folds run sequentially) and ~1/e stay empty — the
     * pin's job is preventing the byte-based collapse, and the expected
     * max cells/partition stays O(log n / log log n) of even. Pick the
-    * cube P at-or-above the cluster's parallelism, as with joinLocal. */
+    * cube P at-or-above the cluster's parallelism. */
   override def requiredChildDistribution: Seq[Distribution] =
     Seq(ClusteredDistribution(Seq(child.output.head),
       requiredNumPartitions = Some(nCells)))

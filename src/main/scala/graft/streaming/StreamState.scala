@@ -46,10 +46,17 @@ object StreamState {
     df.coalesce(1).write.mode("overwrite").parquet(batchDir(dir, batchId))
 
   /** The state directory as a DataFrame (batch_id partition column
-    * included), or None when no batch has landed yet. */
-  def readDir(spark: SparkSession, dir: String): Option[DataFrame] =
-    try Some(spark.read.option("basePath", dir).parquet(dir))
-    catch { case _: org.apache.spark.sql.AnalysisException => None }
+    * included), or None when no batch has landed yet. A missing dir is
+    * checked first: handing it to `spark.read` logs a stack trace
+    * before the AnalysisException; an existing but empty dir still
+    * lands in the catch. */
+  def readDir(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val base = new Path(dir)
+    if (!base.getFileSystem(spark.sessionState.newHadoopConf()).exists(base)) None
+    else
+      try Some(spark.read.option("basePath", dir).parquet(dir))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
+  }
 
   /** The standing view of `dir` for batch `excludeBatchId`: every
     * landed batch except that one, projected to `schema`'s columns;

@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
+import graft.ext.DedupIndex.{Hashes, MaxBucket, RowsPerBand, ThreshDen, ThreshNum}
+
 /** Dev tool: measure the pipeline operators at corpus scales far above
   * the bench fixture (sf0.1 = 5k docs) to show the shuffle structure —
   * not constants — is what carries to cluster scale.
@@ -101,8 +103,8 @@ object PipelineHeadroom {
           val rows0 = graft.ext.TextOps.wordShingleRows(
             docsDf, "doc_id", "text", 3)
           val pairs = graft.ext.TextOps.lshNearDupPairs(rows0, "doc_id",
-              numHashes = 36, rowsPerBand = 6, maxBucketSize = 100,
-              threshNum = 8, threshDen = 10)
+              numHashes = Hashes, rowsPerBand = RowsPerBand, maxBucketSize = MaxBucket,
+              threshNum = ThreshNum, threshDen = ThreshDen)
             .select(col("a_id"), col("b_id"))
           val (labels, rounds) =
             graft.ext.DedupQueries.connectedComponents(pairs, "dd16-headroom")

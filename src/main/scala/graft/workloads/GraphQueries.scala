@@ -249,11 +249,12 @@ object GraphQueries {
         // g03's triangle as a NATURAL join over attrs (x, y, z):
         // R1(x,y) ⋈ R2(y,z) ⋈ R3(z,x), run through the hypercube
         // operator with the symmetric 3×3×3 cube (27 cells; the exact
-        // share solver returns (3,3,3) for equal sizes — spec-pinned).
-        // The win over g03's plan is not this fixture (the fold joins
-        // carry the same data volume here) but SKEW: a heavy shared
-        // vertex splits across the other two attrs' 9 cells instead of
-        // landing in one reducer — asserted by the spread spec.
+        // share solver returns (3,3,3) for equal sizes — spec-pinned):
+        // one replicated-input shuffle to the cells, then a local
+        // per-cell fold. The win over g03's plan is not this fixture
+        // but SKEW: a heavy shared vertex splits across the other two
+        // attrs' 9 cells instead of landing in one reducer — asserted
+        // by the spread spec.
         val e = edges(s, dir)
         val rels = Seq(
           HypercubeJoin.Rel(e.select(col("src").as("x"), col("tgt").as("y")), Seq("x", "y")),
@@ -273,16 +274,13 @@ object GraphQueries {
 
     CatalogQuery(
       "g08b_hypercube_square",
-      "Square count via a 4-attribute ONE-ROUND hypercube (2x2x2x2 cube, joinLocal: single replicated shuffle + per-cell local fold) — g04's equi-skeleton, distinctness filters applied post-join",
+      "Square count via a 4-attribute ONE-ROUND hypercube (P=32, a 2x2x2x4 cube: single replicated shuffle + per-cell local fold) — g04's equi-skeleton, distinctness filters applied post-join",
       (s, dir) => {
         // g04's square as a natural join over attrs (h, p, q, r):
         // a(h→p), b(h→q), c(r→p), d(r→q) — shared src hub h, shared
         // dst pair (p, q), second src r. The hypercube carries the
         // EQUI skeleton; the three distinctness predicates are
-        // post-join filters exactly as in g04's binary plan. 4 attrs,
-        // P=16 → the symmetric (2,2,2,2) cube. This entry runs the
-        // genuinely one-round joinLocal path (g08 covers the cascade
-        // path), so BOTH executors sit under the DuckDB value gate.
+        // post-join filters exactly as in g04's binary plan.
         val e = edges(s, dir).filter(col("src") % 2 === 0 && col("tgt") % 2 === 0)
         val rels = Seq(
           HypercubeJoin.Rel(e.select(col("src").as("h"), col("tgt").as("p")), Seq("h", "p")),
@@ -292,10 +290,10 @@ object GraphQueries {
         // P=32 (a (2,2,2,4) cube): one cell per local[32] slot — the
         // cell is the parallelism unit in the one-round executor. At
         // this fixture the replicated-input shuffle dominates either
-        // way (~3 s at sf0.1, P=16 and P=32 measure equal); the cube
-        // sizing matters at the scale where cell LOAD is the bound.
+        // way; the cube sizing matters at the scale where cell LOAD is
+        // the bound.
         val sh = HypercubeJoin.shares(rels.map(r => (r.attrs, 1.0)), 32)
-        HypercubeJoin.joinLocal(rels, sh)
+        HypercubeJoin.join(rels, sh)
           .filter(col("p") =!= col("q") && col("r") =!= col("h") && col("q") =!= col("p"))
           .agg(count(lit(1)).as("n_squares"))
       },
@@ -314,13 +312,6 @@ object GraphQueries {
       "g08c_hypercube_planned",
       "Square count via the PLANNED one-round hypercube (custom LogicalPlan + SparkStrategy + SparkPlan: HypercubeJoinExec, single cell Exchange in EXPLAIN) — same semantics as g08b",
       (s, dir) => {
-        // Register the strategy if this session lacks it — additive and
-        // inert for every other query (it matches only
-        // HypercubeJoinNode, which only joinPlanned constructs), unlike
-        // a conf mutation; idempotent + synchronized, and a no-op on a
-        // session built with
-        // spark.sql.extensions=graft.plans.GraftExtensions.
-        graft.plans.HypercubeStrategy.ensureRegistered(s)
         val e = edges(s, dir).filter(col("src") % 2 === 0 && col("tgt") % 2 === 0)
         val rels = Seq(
           HypercubeJoin.Rel(e.select(col("src").as("h"), col("tgt").as("p")), Seq("h", "p")),
@@ -328,7 +319,7 @@ object GraphQueries {
           HypercubeJoin.Rel(e.select(col("src").as("r"), col("tgt").as("p")), Seq("r", "p")),
           HypercubeJoin.Rel(e.select(col("src").as("r"), col("tgt").as("q")), Seq("r", "q")))
         val sh = HypercubeJoin.shares(rels.map(r => (r.attrs, 1.0)), 32)
-        HypercubeJoin.joinPlanned(rels, sh)
+        HypercubeJoin.join(rels, sh)
           .filter(col("p") =!= col("q") && col("r") =!= col("h") && col("q") =!= col("p"))
           .agg(count(lit(1)).as("n_squares"))
       },

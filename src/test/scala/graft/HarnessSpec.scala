@@ -149,18 +149,20 @@ class HarnessSpec extends SparkSpec {
     assert(GraftSession.planConfs.map(_.label) == Seq("preferSMJ", "runtimeBloom", "shjLocalMap"))
   }
 
-  /** "path: needle" for every `src/main/scala` source other than
-    * `owner` (a path under that root, which must exist) that contains
+  /** "path: needle" for every `.scala` source under `root` other than
+    * `owner` (a path under that root, which must exist; "" exempts no
+    * file and only checks that `root` is a directory) that contains
     * one of `needles`. */
-  private def scanMain(owner: String, needles: Seq[String]): List[String] = {
+  private def scanMain(owner: String, needles: Seq[String],
+      root: String = "src/main/scala"): List[String] = {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._
-    val root = Paths.get("src/main/scala")
-    assert(Files.isRegularFile(root.resolve(owner)),
-      s"scan root ${root.toAbsolutePath} does not hold ${Paths.get(owner).getFileName}")
-    val walk = Files.walk(root)
+    val dir = Paths.get(root)
+    assert(if (owner.isEmpty) Files.isDirectory(dir) else Files.isRegularFile(dir.resolve(owner)),
+      s"scan root ${dir.toAbsolutePath} does not hold ${Paths.get(owner).getFileName}")
+    val walk = Files.walk(dir)
     try walk.iterator.asScala.flatMap { (p: Path) =>
-      if (!p.toString.endsWith(".scala") || p.endsWith(owner)) Nil
+      if (!p.toString.endsWith(".scala") || owner.nonEmpty && p.endsWith(owner)) Nil
       else {
         val src = Files.readString(p)
         needles.filter(src.contains).map(n => s"$p: $n")
@@ -186,5 +188,12 @@ class HarnessSpec extends SparkSpec {
       Seq("/batch_id=$", "\"batch_id=\""))
     assert(offenders.isEmpty,
       s"write and name micro-batch partitions through graft.streaming.StreamState, not in: ${offenders.mkString(", ")}")
+  }
+
+  test("no file under operators/ drops to the RDD API") {
+    val offenders = scanMain("", Seq("groupByKey", ".rdd"),
+      root = "src/main/scala/graft/operators")
+    assert(offenders.isEmpty,
+      s"operators plan through Catalyst, not the RDD API: ${offenders.mkString(", ")}")
   }
 }

@@ -20,6 +20,19 @@ class HypercubeSpec extends SparkSpec {
       pmod(xxhash64(col("id"), lit(2)), lit(40)).as("tgt"))
       .distinct()
 
+  /** The one-round property, readable in the executed plan: the
+    * HypercubeJoin node with a SINGLE cell shuffle under it (the
+    * replicated-input exchange; the inputs' own shuffles match other
+    * keys). With AQE the string repeats the tree as Final + Initial,
+    * so only the final section is counted. */
+  private def assertOneCellExchange(df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    val finalPlan = plan.split("== Initial Plan ==").head
+    assert(finalPlan.contains("HypercubeJoin"), s"strategy did not fire:\n$plan")
+    assert("Exchange hashpartitioning\\(_hc_cell".r.findAllIn(finalPlan).size == 1,
+      s"expected exactly one cell exchange:\n$plan")
+  }
+
   test("shares: symmetric triangle gets the symmetric cube; skewed sizes push the big relation's missing attr to share 1") {
     val tri = Seq(Seq("x", "y") -> 1.0, Seq("y", "z") -> 1.0, Seq("z", "x") -> 1.0)
     assert(HypercubeJoin.shares(tri, 27) == Map("x" -> 3, "y" -> 3, "z" -> 3))
@@ -82,7 +95,7 @@ class HypercubeSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("joinLocal: one-round local fold matches the declarative join on triangle AND square shapes") {
+  test("join: the physical operator matches the binary-join plan on triangle and square, with exactly ONE exchange") {
     val e = synthEdges
     val tri = Seq(
       Rel(e.select(col("src").as("x"), col("tgt").as("y"),
@@ -90,67 +103,35 @@ class HypercubeSpec extends SparkSpec {
       Rel(e.select(col("src").as("y"), col("tgt").as("z")), Seq("y", "z")),
       Rel(e.select(col("src").as("z"), col("tgt").as("x")), Seq("z", "x")))
     val shTri = HypercubeJoin.shares(tri.map(r => (r.attrs, 1.0)), 27)
-    val gotTri = HypercubeJoin.joinLocal(tri, shTri)
+    val planned = HypercubeJoin.join(tri, shTri)
       .select("x", "y", "z", "r1_payload")
+    val got = planned.collect().map(_.toString).sorted.toSeq
+    val a = e.as("a"); val b = e.as("b"); val c = e.as("c")
+    val want = a.join(b, col("a.tgt") === col("b.src"))
+      .join(c, col("b.tgt") === col("c.src") && col("c.tgt") === col("a.src"))
+      .select(col("a.src").as("x"), col("a.tgt").as("y"), col("b.tgt").as("z"),
+        (col("a.src") * 1000 + col("a.tgt")).as("r1_payload"))
       .collect().map(_.toString).sorted.toSeq
-    val wantTri = HypercubeJoin.join(tri, shTri)
-      .select("x", "y", "z", "r1_payload")
-      .collect().map(_.toString).sorted.toSeq
-    assert(wantTri.nonEmpty && gotTri == wantTri)
+    assert(want.nonEmpty && got == want)
+    assertOneCellExchange(planned)
+
     val sq = Seq(
       Rel(e.select(col("src").as("h"), col("tgt").as("p")), Seq("h", "p")),
       Rel(e.select(col("src").as("h"), col("tgt").as("q")), Seq("h", "q")),
       Rel(e.select(col("src").as("r"), col("tgt").as("p")), Seq("r", "p")),
       Rel(e.select(col("src").as("r"), col("tgt").as("q")), Seq("r", "q")))
     val shSq = HypercubeJoin.shares(sq.map(r => (r.attrs, 1.0)), 16)
-    val gotSq = HypercubeJoin.joinLocal(sq, shSq).select("h", "p", "q", "r")
+    val gotSq = HypercubeJoin.join(sq, shSq).select("h", "p", "q", "r")
       .collect().map(_.toString).sorted.toSeq
-    val wantSq = HypercubeJoin.join(sq, shSq).select("h", "p", "q", "r")
+    // the square's equi-skeleton, binary-join formulation
+    val d = e.as("d")
+    val wantSq = a.join(b, col("a.src") === col("b.src"))
+      .join(c, col("a.tgt") === col("c.tgt"))
+      .join(d, col("c.src") === col("d.src") && col("d.tgt") === col("b.tgt"))
+      .select(col("a.src").as("h"), col("a.tgt").as("p"),
+        col("b.tgt").as("q"), col("c.src").as("r"))
       .collect().map(_.toString).sorted.toSeq
     assert(wantSq.nonEmpty && gotSq == wantSq)
-  }
-
-  test("joinPlanned: the physical operator matches joinLocal on triangle and square, with exactly ONE exchange") {
-    val prev = spark.experimental.extraStrategies
-    try {
-      spark.experimental.extraStrategies = prev :+ graft.plans.HypercubeStrategy
-      val e = synthEdges
-      val tri = Seq(
-        Rel(e.select(col("src").as("x"), col("tgt").as("y"),
-          (col("src") * 1000 + col("tgt")).as("r1_payload")), Seq("x", "y")),
-        Rel(e.select(col("src").as("y"), col("tgt").as("z")), Seq("y", "z")),
-        Rel(e.select(col("src").as("z"), col("tgt").as("x")), Seq("z", "x")))
-      val shTri = HypercubeJoin.shares(tri.map(r => (r.attrs, 1.0)), 27)
-      val planned = HypercubeJoin.joinPlanned(tri, shTri)
-        .select("x", "y", "z", "r1_payload")
-      val got = planned.collect().map(_.toString).sorted.toSeq
-      val want = HypercubeJoin.joinLocal(tri, shTri)
-        .select("x", "y", "z", "r1_payload")
-        .collect().map(_.toString).sorted.toSeq
-      assert(want.nonEmpty && got == want)
-      // the one-round property, readable in the plan: the HypercubeJoin
-      // node with a SINGLE cell shuffle under it (the replicated-input
-      // exchange; synthEdges' own prep shuffles sit below the union and
-      // don't belong to the operator); with AQE the string repeats the
-      // tree as Final + Initial, so count within the final section only
-      val plan = planned.queryExecution.executedPlan.toString
-      val finalPlan = plan.split("== Initial Plan ==").head
-      assert(finalPlan.contains("HypercubeJoin"), s"strategy did not fire:\n$plan")
-      assert("Exchange hashpartitioning\\(_hc_cell".r.findAllIn(finalPlan).size == 1,
-        s"expected exactly one cell exchange:\n$plan")
-
-      val sq = Seq(
-        Rel(e.select(col("src").as("h"), col("tgt").as("p")), Seq("h", "p")),
-        Rel(e.select(col("src").as("h"), col("tgt").as("q")), Seq("h", "q")),
-        Rel(e.select(col("src").as("r"), col("tgt").as("p")), Seq("r", "p")),
-        Rel(e.select(col("src").as("r"), col("tgt").as("q")), Seq("r", "q")))
-      val shSq = HypercubeJoin.shares(sq.map(r => (r.attrs, 1.0)), 16)
-      val gotSq = HypercubeJoin.joinPlanned(sq, shSq).select("h", "p", "q", "r")
-        .collect().map(_.toString).sorted.toSeq
-      val wantSq = HypercubeJoin.joinLocal(sq, shSq).select("h", "p", "q", "r")
-        .collect().map(_.toString).sorted.toSeq
-      assert(wantSq.nonEmpty && gotSq == wantSq)
-    } finally spark.experimental.extraStrategies = prev
   }
 
   test("cubed: a heavy join value spreads across the other attrs' cells instead of one reducer") {
@@ -170,10 +151,10 @@ class HypercubeSpec extends SparkSpec {
 
   test("binary/complex-typed join attributes are rejected loudly by ALL flavors (reference-equality would silently drop matches)") {
     // Array[Byte] compares by REFERENCE in the JVM — two co-located
-    // binary attr values that are byte-equal would fail joinLocal's
-    // boxed `!=` / HashMap-key comparison and the pair would vanish
-    // with no error. The guard turns that silent wrong answer into an
-    // IllegalArgumentException in every flavor.
+    // binary attr values that are byte-equal would fail the fold's
+    // HashMap-key comparison and the pair would vanish with no error.
+    // The guard turns that silent wrong answer into an
+    // IllegalArgumentException.
     val binEdges = synthEdges.select(
       unhex(lpad(hex(col("src")), 16, "0")).as("x"),
       col("tgt").as("y"))
@@ -181,16 +162,13 @@ class HypercubeSpec extends SparkSpec {
       Rel(binEdges, Seq("x", "y")),
       Rel(binEdges.select(col("y"), col("x").as("z")), Seq("y", "z")))
     val sh = Map("x" -> 2, "y" -> 2, "z" -> 2)
-    for (flavor <- Seq[(Seq[Rel], Map[String, Int]) => DataFrame](
-        HypercubeJoin.join, HypercubeJoin.joinLocal, HypercubeJoin.joinPlanned)) {
-      val ex = intercept[IllegalArgumentException](flavor(binRels, sh))
-      assert(ex.getMessage.contains("atomic, non-binary"), ex.getMessage)
-    }
+    val ex = intercept[IllegalArgumentException](HypercubeJoin.join(binRels, sh))
+    assert(ex.getMessage.contains("atomic, non-binary"), ex.getMessage)
     // array-typed attrs are equally rejected (same representation hazard)
     val arrRels = Seq(
       Rel(synthEdges.select(array(col("src")).as("x"), col("tgt").as("y")), Seq("x", "y")),
       Rel(synthEdges.select(col("tgt").as("y"), array(col("src")).as("z")), Seq("y", "z")))
-    intercept[IllegalArgumentException](HypercubeJoin.joinLocal(arrRels, sh))
+    intercept[IllegalArgumentException](HypercubeJoin.join(arrRels, sh))
     // and the guard does NOT fire for payload columns — binary PAYLOAD
     // is carried, never compared, so it stays legal
     val payRels = Seq(
@@ -198,8 +176,9 @@ class HypercubeSpec extends SparkSpec {
         unhex(lpad(hex(col("src")), 16, "0")).as("bin_payload")), Seq("x", "y")),
       Rel(synthEdges.select(col("src").as("y"), col("tgt").as("z")), Seq("y", "z")))
     val shTri = Map("x" -> 2, "y" -> 2, "z" -> 1)
-    assert(HypercubeJoin.joinLocal(payRels, shTri).count() ==
-      HypercubeJoin.join(payRels, shTri).count())
+    val (p1, p2) = (payRels(0).df.as("p1"), payRels(1).df.as("p2"))
+    assert(HypercubeJoin.join(payRels, shTri).count() ==
+      p1.join(p2, col("p1.y") === col("p2.y")).count())
   }
 
   test("autoShares: parquet-backed relations solve from plan statistics with ZERO Spark jobs") {
@@ -235,7 +214,8 @@ class HypercubeSpec extends SparkSpec {
   test("ensureRegistered is a no-op on an extensions-built session, even called concurrently") {
     // SparkSpec's session registers GraftExtensions at build time — the
     // strategy is in the planner already, so runtime registration must
-    // not append a second copy (g08c calls this on every run)
+    // not append a second copy (HypercubeJoin.join calls this on every
+    // run)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -247,15 +227,18 @@ class HypercubeSpec extends SparkSpec {
     })), 30.seconds)
     assert(spark.experimental.extraStrategies == before,
       "extensions-built session was mutated by ensureRegistered")
-    // and joinPlanned works on this session with NO manual registration
+    // and join works on this session with NO manual registration
     val e = synthEdges
     val tri = Seq(
       Rel(e.select(col("src").as("x"), col("tgt").as("y")), Seq("x", "y")),
       Rel(e.select(col("src").as("y"), col("tgt").as("z")), Seq("y", "z")),
       Rel(e.select(col("src").as("z"), col("tgt").as("x")), Seq("z", "x")))
     val sh = HypercubeJoin.shares(tri.map(r => (r.attrs, 1.0)), 8)
-    assert(HypercubeJoin.joinPlanned(tri, sh).count() ==
-      HypercubeJoin.join(tri, sh).count())
+    val (a, b, c) = (e.as("a"), e.as("b"), e.as("c"))
+    assert(HypercubeJoin.join(tri, sh).count() ==
+      a.join(b, col("a.tgt") === col("b.src"))
+        .join(c, col("b.tgt") === col("c.src") && col("c.tgt") === col("a.src"))
+        .count())
   }
 
   test("g08 catalog entry matches g03's result on the fixture") {
@@ -265,5 +248,14 @@ class HypercubeSpec extends SparkSpec {
     val g08 = run("g08_hypercube_triangle").collect()(0).getLong(0)
     val g03 = run("g03_triangle_count").collect()(0).getLong(0)
     assert(g08 == g03, s"hypercube $g08 vs binary $g03")
+  }
+
+  test("g08b and g08c catalog entries agree on the fixture, each through one cell exchange") {
+    val g08b = run("g08b_hypercube_square")
+    val g08c = run("g08c_hypercube_planned")
+    val (nb, nc) = (g08b.collect()(0).getLong(0), g08c.collect()(0).getLong(0))
+    assert(nb == nc, s"g08b $nb vs g08c $nc")
+    assertOneCellExchange(g08b)
+    assertOneCellExchange(g08c)
   }
 }
