@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Benchmark main: runs every catalog query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric","value","unit","queries","sf"}. */
 object Bench {
@@ -64,7 +66,16 @@ object Bench {
         .foreach(_.unpersist(blocking = false))
       (dt, ok)
     }
-    val passes = (1 to reps).map(_ => cat.map(runOnce))
+    // Generated classes compiled in each pass: with Spark's codegen cache
+    // sized by GraftExtensions, a pass whose classes fit the cache
+    // compiles (almost) nothing again.
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val (passes, cg) = (1 to reps).map { _ =>
+      val c0 = compiles
+      val times = cat.map(runOnce)
+      (times, compiles - c0)
+    }.unzip
+    val cgJson = cg.mkString("[", ",", "]")
     val results = cat.zipWithIndex.map { case (q, i) =>
       val times = passes.map(_(i))
       // A throw on ANY rep fails the query — never masquerade as success.
@@ -146,10 +157,11 @@ object Bench {
     // Effective plan-shaping configs (r18, ADVICE): the env-gated join
     // strategy means two boards can time different plans — record which
     // one THIS board ran so receipts are self-describing.
-    val confJson = GraftSession.planConfs
-      .map(p => "\"" + p.label + "\":\"" + spark.conf.get(p.key, "<unset>") + "\"")
+    val confJson = (GraftSession.planConfs.map(p => p.label -> spark.conf.get(p.key, "<unset>")) :+
+      ("codegenCache" -> plans.GraftExtensions.codegenCacheEntries.toString))
+      .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failed,$sentinelJson,"flagged":$flagged,"decomp":$decomp,"conf":$confJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failed,$sentinelJson,"flagged":$flagged,"decomp":$decomp,"conf":$confJson,"cg":$cgJson,"sf":"$sfDir"}""")
     // The harness that captures this output keeps only the LAST ~2000
     // characters of stdout, and the full per-query line above is ~4x
     // that — so it can never be machine-parsed from the capture. Print a
@@ -164,7 +176,7 @@ object Bench {
       .toSeq.sorted.mkString("{", ",", "}")
     val slow = results.filter(_._3).sortBy(-_._2)
     // greedily keep the slowest queries while the digest stays under budget
-    val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size},"families":$fams,"failed":$failed,$sentinelJson,"flagged":$flaggedDigest,"decomp":$decompDigest,"conf":$confJson,"sf":"$sfDir","slowest":{"""
+    val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec","nq":${results.size},"families":$fams,"failed":$failed,$sentinelJson,"flagged":$flaggedDigest,"decomp":$decompDigest,"conf":$confJson,"cg":$cgJson,"sf":"$sfDir","slowest":{"""
     val budget = 1900 - head.length - 2
     val kept = new StringBuilder
     slow.foreach { case (k, v, _) =>

@@ -62,8 +62,12 @@ object Verify {
     // values this verification actually ran with in a sidecar file (NOT
     // inside oracle_sql.json, whose keys the driver treats as query
     // names).
-    val conf = (GraftSession.planConfs.map(_.key) :+ "spark.sql.shuffle.partitions")
-      .map(k => s"${q(k)}: ${q(spark.conf.get(k, "<unset>"))}")
+    // The codegen cache size is JVM-wide, not a session conf: report the
+    // size GraftExtensions gave it.
+    val conf = ((GraftSession.planConfs.map(_.key) :+ "spark.sql.shuffle.partitions")
+      .map(k => k -> spark.conf.get(k, "<unset>")) :+
+      (plans.GraftExtensions.codegenCacheKey -> plans.GraftExtensions.codegenCacheEntries.toString))
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_config.json"), conf)
     spark.stop()

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LogicalPlan, Project}
@@ -122,18 +121,5 @@ object RangeJoinRule extends Rule[LogicalPlan] with PredicateHelper {
       else (intervalBinned, pointBinned)
     Some(Project(j.output,
       Join(newLeft, newRight, Inner, Some(newCond), j.hint)))
-  }
-}
-
-/** `spark.sql.extensions=graft.plans.GraftExtensions` (which
-  * `graft.GraftSession` sets) registers every graft planner
-  * extension; on a live session the
-  * runtime equivalents are `spark.experimental.extraOptimizations`
-  * (the rule) and `spark.experimental.extraStrategies` (the
-  * hypercube strategy). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(_ => RangeJoinRule)
-    ext.injectPlannerStrategy(_ => HypercubeStrategy)
   }
 }

@@ -190,6 +190,44 @@ class HarnessSpec extends SparkSpec {
       s"write and name micro-batch partitions through graft.streaming.StreamState, not in: ${offenders.mkString(", ")}")
   }
 
+  test("GraftExtensions.scala holds the only codegen cache setting in src/main") {
+    val offenders = scanMain("graft/plans/GraftExtensions.scala",
+      Seq("codegen.cache.maxEntries", "CODEGEN_CACHE_MAX_ENTRIES", "CodeGenerator", "withExistingConf"))
+    assert(offenders.isEmpty,
+      s"size Spark's codegen cache through graft.plans.GraftExtensions, not in: ${offenders.mkString(", ")}")
+  }
+
+  test("re-running a catalog round in one session compiles at most 5% of its classes again") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    // the session loads GraftExtensions, which sizes the codegen cache
+    assert(spark.conf.get("spark.sql.extensions") == "graft.plans.GraftExtensions")
+    // About 245 compiles at sf0.001, inside the cache. Each query's
+    // re-run repeats its plans; tpcds_q14a, q4, q23a, q64 and dd10 do
+    // not always (AQE re-plans or renumbers stages), so they are left out.
+    val names = Seq("tpcds_q72", "impala_q19", "rq1_category_rollup_rank",
+      "tpcds_q3", "tpcds_q24a", "tpcds_q47", "tpcds_q51")
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def round(): Seq[(String, Long)] = names.map { n =>
+      val c0 = compiles
+      val df = run(n)
+      df.agg(count(lit(1)), bit_xor(xxhash64(struct(df.columns.map(col): _*)))).collect()
+      n -> (compiles - c0)
+    }
+    // The cache is JVM-wide and earlier suites may hold these classes:
+    // empty it so the first round compiles every class it needs.
+    val cacheOf = CodeGenerator.getClass.getDeclaredMethod("cache")
+    cacheOf.setAccessible(true)
+    val cache = cacheOf.invoke(CodeGenerator)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+    val first = round()
+    val firstN = first.map(_._2).sum
+    assert(firstN > 200, s"first round compiled only $firstN classes: $first")
+    val again = round()
+    assert(again.map(_._2).sum <= firstN * 0.05,
+      s"the re-run compiled classes again: $again (first round: $first)")
+  }
+
   test("no file under operators/ drops to the RDD API") {
     val offenders = scanMain("", Seq("groupByKey", ".rdd"),
       root = "src/main/scala/graft/operators")
