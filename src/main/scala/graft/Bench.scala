@@ -158,7 +158,8 @@ object Bench {
     // strategy means two boards can time different plans — record which
     // one THIS board ran so receipts are self-describing.
     val confJson = (GraftSession.planConfs.map(p => p.label -> spark.conf.get(p.key, "<unset>")) :+
-      ("codegenCache" -> plans.GraftExtensions.codegenCacheEntries.toString))
+      ("codegenCache" -> plans.GraftExtensions.codegenCacheEntries.toString) :+
+      ("stageIdInClassName" -> spark.conf.get(plans.GraftExtensions.stageIdInClassNameKey)))
       .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"failed":$failed,$sentinelJson,"flagged":$flagged,"decomp":$decomp,"conf":$confJson,"cg":$cgJson,"sf":"$sfDir"}""")

@@ -64,7 +64,8 @@ object Verify {
     // names).
     // The codegen cache size is JVM-wide, not a session conf: report the
     // size GraftExtensions gave it.
-    val conf = ((GraftSession.planConfs.map(_.key) :+ "spark.sql.shuffle.partitions")
+    val conf = ((GraftSession.planConfs.map(_.key) :+ "spark.sql.shuffle.partitions" :+
+      plans.GraftExtensions.stageIdInClassNameKey)
       .map(k => k -> spark.conf.get(k, "<unset>")) :+
       (plans.GraftExtensions.codegenCacheKey -> plans.GraftExtensions.codegenCacheEntries.toString))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }
